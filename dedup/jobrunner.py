@@ -20,7 +20,12 @@ from dedup.candidates import cap_buckets, simhash_candidates_arrow
 from dedup.components import assign_clusters, connected_components
 from dedup.config import DedupConfig
 from dedup.ingest import exact_edges, representatives, to_docs
-from dedup.lineage import StageTimer, metrics_df, partition_lineage
+from dedup.lineage import (
+    StageTimer,
+    collect_lineage,
+    metrics_table,
+    partition_lineage,
+)
 from dedup.pipeline import cluster_report
 from dedup.signatures import (
     range_partition_by_sig_prefix,
@@ -78,17 +83,18 @@ class Runner:
                 partition_by=partition_by, bucket_by=bucket_by,
                 n_buckets=n_buckets,
             )
+        # bookkeeping is ONE Spark job: the read-back is schema-pinned,
+        # the lineage rows are collected once (their rows_out sum is the
+        # stage's row count) and both audit commits are driver-side
+        # pyarrow appends
         out = self.tio.read(name, snap)
-        self.tio.write(
-            partition_lineage(out, self.run_id, name, t.wall_ms, snap),
-            "lineage",
-            mode="append",
+        lin = collect_lineage(
+            partition_lineage(out, self.run_id, name, t.wall_ms, snap)
         )
+        self.tio.write(lin, "lineage", mode="append")
+        rows = sum(lin.column("rows_out").to_pylist())
         self.tio.write(
-            metrics_df(
-                self.spark, self.run_id, name,
-                {"rows": out.count(), "wall_ms": t.wall_ms},
-            ),
+            metrics_table(self.run_id, name, {"rows": rows, "wall_ms": t.wall_ms}),
             "metrics",
             mode="append",
         )

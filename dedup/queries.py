@@ -23,6 +23,10 @@ brute-force oracles instead (tests/oracle.py).
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -2327,80 +2331,50 @@ def q_grouping_sets_report(spark, sf_dir):
     )
 
 
-#: Enumeration order of the driver contract. The driver records
-#: CORRECTNESS rows for exactly the FIRST 50 registered qkeys (confirmed
-#: three times: rounds 1-3 all cut at precisely 50, at different list
-#: positions). More registered keys than 50 ⇒ full coverage must be a
-#: UNION across rounds: any key WITHOUT a green driver record leads the
-#: list (after round 3 that is only the round-4 additions — every older
-#: key holds at least one green record), then the previously-recorded
-#: keys in rotation order. tests/test_driver_rotation.py pins this
-#: discipline mechanically against the CORRECTNESS_r*.json records.
-#: The cap then lands on keys that already hold a green r2 record, so
-#: after round 3 every registered operator has at least one green driver
-#: record. Keep any NEW qkey ahead of the r2-green block.
-#: Round-5 rule (r4 verdict item 1): OLDEST-newest-record first. Keys
-#: with no green record lead; after them the list is ordered by the
-#: round of each key's NEWEST green driver record, ascending — so the
-#: 50-key cap always re-records the stalest keys. Enforced mechanically
-#: (monotonicity, not just unrecorded-inside-cap) by
-#: tests/test_driver_rotation.py against the CORRECTNESS_r*.json files.
-_PRIORITY = [
-    # -- round-5 additions (no driver record yet) -------------------------
-    "semantic_dedup", "sessionize", "event_funnel", "pq_codes", "pq_topk",
-    "cell_label_purity", "stream_sessions",
-    # -- newest green record is r2 (25 keys, §2 D→J order) ----------------
-    "asof_latest", "interval_overlap",
-    "est_jaccard", "exact_jaccard", "lcs_ratio", "hamming_simhash",
-    "substr_dedup",
-    "exact_dedup", "group_agg", "distinct_ops", "approx_metrics",
-    "rollup_report", "collect_bucket", "grouped_agg_udf",
-    "canonical_pick", "topk_per_group", "analytic_fns", "frame_agg",
-    "order_limit", "sort_within", "union_edges", "set_ops",
-    "conn_comp", "cluster_assign",
-    "stream_ingest",
-    # -- newest green record is r3 (15 keys, §2 B→D order) ----------------
-    "string_fns", "date_fns", "math_bit_fns", "array_fns", "json_map_fns",
-    "shingle", "minhash", "simhash", "band_keys",
-    "lsh_bucket_join", "salted_join", "broadcast_join", "range_join",
-    "semi_join", "anti_join",
-    # -- newest green record is r4 (the cap lands inside this block) ------
-    # §2 A/B head first (the oldest union members of this block: their
-    # only OTHER records are r1/r2), then the r3-head extras, then the
-    # round-4 additions (freshest records, greenest to leave out).
-    "scan_pages", "scan_jdbc", "sink_table", "snapshot_read", "gen_pages",
-    "project_prune", "filter_pred", "extract_text", "normalize_text",
-    "content_hash",
-    "ngram_jaccard", "ann_topk", "embedding_neardup", "ann_lsh",
-    "lang_id", "quality_score", "token_count", "doc_fingerprint",
-    "multimodal_meta", "near_dup_clusters",
-    "watermark_dedup", "stream_windows", "foreach_batch_dedup",
-    "stateful_sketch", "cluster_report",
-    "near_dup_with_containment", "line_dedup", "decontaminate",
-    "repetition_score", "vocab_topk", "url_normalize", "ann_ivf",
-    "snapshot_diff", "curate", "shingle_words",
-    "domain_stats", "paragraph_dedup", "stratified_sample", "tfidf_topk",
-    "domain_cap", "filter_funnel", "length_quantiles",
-    "cube_report", "grouping_sets_report", "sink_partitioned",
-    "bucketed_join", "redact_pii", "pack_chunks", "cross_corpus_neardup",
-    "ann_ivf_full",
-]
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _ordered_names() -> list[str]:
-    extras = [n for n in REGISTRY if n not in _PRIORITY]
-    missing = [n for n in _PRIORITY if n not in REGISTRY]
-    assert not missing, f"priority list references unregistered qkeys: {missing}"
-    return _PRIORITY + extras
+def _newest_green_round() -> dict[str, int]:
+    """Round of each qkey's NEWEST green driver record across the
+    committed CORRECTNESS_r*.json files: a SQL-oracle hash pass, or a
+    rows-only run (no oracle) with > 0 rows."""
+    newest: dict[str, int] = {}
+    for path in glob.glob(os.path.join(_REPO, "CORRECTNESS_r*.json")):
+        rnd = int(re.search(r"_r(\d+)\.json$", path).group(1))
+        with open(path) as f:
+            rec = json.load(f)
+        for key, row in rec.items():
+            if row.get("hash_match") or (
+                row.get("err") == "no_oracle" and (row.get("spark_rows") or 0) > 0
+            ):
+                newest[key] = max(newest.get(key, 0), rnd)
+    return newest
+
+
+def _rotation_order() -> list[str]:
+    """Enumeration order of the driver contract. The driver records
+    CORRECTNESS rows for exactly the FIRST 50 registered qkeys, so with
+    more keys than that, full coverage is a union across rounds and the
+    cap must land on the STALEST keys: keys without a green record
+    first, then by the round of each key's newest green record,
+    ascending; ties keep registration order (the sort is stable).
+    Derived at import, so a newly committed record re-rotates the list
+    with no hand edit; outside a checkout (no records) it is the
+    registration order. tests/test_driver_rotation.py pins both rules."""
+    newest = _newest_green_round()
+    return sorted(REGISTRY, key=lambda k: newest.get(k, 0))
+
+
+_PRIORITY = _rotation_order()
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: REGISTRY[name][0] for name in _ordered_names()}
+    return {name: REGISTRY[name][0] for name in _PRIORITY}
 
 
 def oracle_sql() -> dict[str, str]:
     return {
         name: REGISTRY[name][1]
-        for name in _ordered_names()
+        for name in _PRIORITY
         if REGISTRY[name][1] is not None
     }

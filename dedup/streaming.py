@@ -288,21 +288,17 @@ def process_batch(
     # other derived table — a retry appends them again, and lineage/
     # metrics consumers are duplicate-tolerant by contract (append-only
     # audit logs; readers aggregate or take latest per (run, stage))
-    from dedup.lineage import metrics_df, partition_lineage
+    from dedup.lineage import collect_lineage, metrics_table, partition_lineage
 
     stage = f"batch-{batch_id}" if batch_id is not None else "batch"
     tio.write(
-        partition_lineage(batch_docs, run_id, f"{stage}/docs"),
+        collect_lineage(
+            partition_lineage(batch_docs, run_id, f"{stage}/docs"),
+            partition_lineage(new_edges, run_id, f"{stage}/edges"),
+        ),
         "lineage", mode="append",
     )
-    tio.write(
-        partition_lineage(new_edges, run_id, f"{stage}/edges"),
-        "lineage", mode="append",
-    )
-    tio.write(
-        metrics_df(spark, run_id, stage, {k: float(v) for k, v in stats.items()}),
-        "metrics", mode="append",
-    )
+    tio.write(metrics_table(run_id, stage, stats), "metrics", mode="append")
 
     # clusters: contract new edges through the committed labels, run CC
     # on the contracted (batch-sized) graph, then relabel by broadcast

@@ -15,6 +15,16 @@ Two backends behind one interface:
   simply invisible — the same isolation story as Iceberg's metadata
   pointer swap.
 
+Plain (unpartitioned, unbucketed) parquet snapshots record the Spark
+schema of what they committed, and ``read`` pins it: a read-back plans
+without the footer-sampling schema-inference job. Manifests written
+before the ``schema`` key existed read exactly as before (inferred).
+
+Small driver-side commits — the per-stage lineage/metrics audit rows —
+arrive as a ``pyarrow.Table``: the parquet backend writes them as one
+file with ``pyarrow.parquet`` and publishes them through the same
+manifest commit, so an audit append launches no Spark job.
+
 Resume registry: ``(run_id, stage, config_hash) → (table, snapshot_id)``
 markers, also atomically renamed into place. A pipeline stage whose
 marker exists is skipped and its committed snapshot is read back.
@@ -28,10 +38,26 @@ import tempfile
 import time
 import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import StructType
 
 from dedup.session import iceberg_available
+
+
+def _iceberg_bucket(n_buckets: int, bucket_by: list[str]):
+    """Iceberg's ``bucket(N, col)`` transform takes ONE column; hashing
+    a column set into buckets has no Iceberg spelling, and making the
+    extra columns identity partitions would silently change the layout
+    the caller asked for."""
+    if len(bucket_by) != 1:
+        raise ValueError(
+            f"iceberg buckets by exactly one column, got bucket_by={bucket_by}"
+        )
+    return F.bucket(n_buckets, bucket_by[0])
 
 
 class TableIO:
@@ -79,6 +105,36 @@ class TableIO:
         snaps = self.snapshots(table)
         return snaps[-1] if snaps else None
 
+    @staticmethod
+    def _next_id(prev: dict | None) -> int:
+        return (prev["snapshot_id"] + 1) if prev else 0
+
+    def _publish(
+        self, table: str, prev: dict | None, mode: str, data_dir: str, **fields
+    ) -> int:
+        """Commit ``data_dir`` as the next snapshot of ``table`` (appends
+        carry the previous snapshot's dirs forward) by atomically renaming
+        its manifest into place; returns the snapshot id. The one manifest
+        writer every commit path goes through."""
+        snapshot_id = self._next_id(prev)
+        dirs = [data_dir]
+        if mode == "append" and prev:
+            dirs = prev["dirs"] + dirs
+        manifest = {
+            "snapshot_id": snapshot_id,
+            "parent": prev["snapshot_id"] if prev else None,
+            "mode": mode,
+            "dirs": dirs,
+            "partition_by": [],
+            **fields,
+            "committed_at": time.time(),
+        }
+        self._atomic_write_json(
+            os.path.join(self._manifest_dir(table), f"{snapshot_id:012d}.json"),
+            manifest,
+        )
+        return snapshot_id
+
     # -- bucketed catalog names ---------------------------------------------
     def _catalog_name(self, table: str, snapshot_id: int) -> str:
         """Session-catalog identifier for one bucketed snapshot. Bucket
@@ -120,7 +176,7 @@ class TableIO:
     # -- write -------------------------------------------------------------
     def write(
         self,
-        df: DataFrame,
+        df: DataFrame | pa.Table,
         table: str,
         mode: str = "append",
         sort_within: list[str] | None = None,
@@ -129,6 +185,10 @@ class TableIO:
         n_buckets: int = 0,
     ) -> int:
         """Write ``df`` as a new snapshot of ``table``; returns snapshot id.
+        ``df`` may also be a ``pyarrow.Table`` of a few driver-side rows
+        (the lineage/metrics audit appends): plain appends only, written
+        by ``pyarrow.parquet`` as one file — no Spark job — and committed
+        through the same manifest publish as a DataFrame append.
         ``sort_within``: optional sortWithinPartitions columns for file
         clustering (H2) before the write.
         ``partition_by``: SURVEY §4.3 physical layout — hive-style
@@ -160,15 +220,20 @@ class TableIO:
                 raise ValueError("bucketed commits are overwrite-only")
             if partition_by:
                 raise ValueError("bucket_by and partition_by are exclusive")
+        arrow = isinstance(df, pa.Table)
+        if arrow and (mode != "append" or sort_within or partition_by or bucket_by):
+            raise ValueError("pyarrow.Table commits are plain appends")
         if self.backend == "iceberg":
-            w = df.writeTo(table)
+            parts = []
             if bucket_by:
-                w = w.partitionedBy(
-                    F.bucket(n_buckets, bucket_by[0]),
-                    *[F.col(c) for c in bucket_by[1:]],
-                )
+                parts = [_iceberg_bucket(n_buckets, bucket_by)]
             elif partition_by and mode != "append":
-                w = w.partitionedBy(*[F.col(c) for c in partition_by])
+                parts = [F.col(c) for c in partition_by]
+            if arrow:
+                df = self.spark.createDataFrame(df)
+            w = df.writeTo(table)
+            if parts:
+                w = w.partitionedBy(*parts)
             (w.append() if mode == "append" else w.createOrReplace())
             return -1  # iceberg assigns its own ids; not used locally
         if bucket_by:
@@ -195,27 +260,25 @@ class TableIO:
                 f"append requested {partition_by}: layouts must match"
             )
         data_dir = os.path.join(self._tdir(table), "data", uuid.uuid4().hex)
-        w = df.write.mode("overwrite")
+        if arrow:
+            os.makedirs(data_dir)
+            pq.write_table(df, os.path.join(data_dir, "part-00000.snappy.parquet"))
+            schema = from_arrow_schema(df.schema)
+        else:
+            w = df.write.mode("overwrite")
+            if partition_by:
+                w = w.partitionBy(*partition_by)
+            w.parquet(data_dir)
+            schema = df.schema
         if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(data_dir)
-        snapshot_id = (prev["snapshot_id"] + 1) if prev else 0
-        dirs = [data_dir]
-        if mode == "append" and prev:
-            dirs = prev["dirs"] + dirs
-        manifest = {
-            "snapshot_id": snapshot_id,
-            "parent": prev["snapshot_id"] if prev else None,
-            "mode": mode,
-            "dirs": dirs,
-            "partition_by": list(partition_by or []),
-            "committed_at": time.time(),
-        }
-        self._atomic_write_json(
-            os.path.join(self._manifest_dir(table), f"{snapshot_id:012d}.json"),
-            manifest,
+            # partition columns are discovered from the directory names
+            # on read, so their types are not the frame's: infer instead
+            return self._publish(
+                table, prev, mode, data_dir, partition_by=list(partition_by)
+            )
+        return self._publish(
+            table, prev, mode, data_dir, schema=schema.jsonValue()
         )
-        return snapshot_id
 
     def _write_bucketed_snapshot(
         self,
@@ -226,9 +289,8 @@ class TableIO:
         sort_within: list[str] | None,
     ) -> int:
         prev = self.latest(table)
-        snapshot_id = (prev["snapshot_id"] + 1) if prev else 0
         data_dir = os.path.join(self._tdir(table), "data", uuid.uuid4().hex)
-        cat = self._catalog_name(table, snapshot_id)
+        cat = self._catalog_name(table, self._next_id(prev))
         w = (
             df.repartition(n_buckets, *[F.col(c) for c in bucket_by])
             .write.mode("overwrite")
@@ -239,24 +301,14 @@ class TableIO:
             w = w.sortBy(*sort_within)  # per-bucket-file sort
         self.spark.sql(f"DROP TABLE IF EXISTS {cat}")
         w.saveAsTable(cat)
-        manifest = {
-            "snapshot_id": snapshot_id,
-            "parent": prev["snapshot_id"] if prev else None,
-            "mode": "overwrite",
-            "dirs": [data_dir],
-            "partition_by": [],
-            "bucket_by": list(bucket_by),
-            "n_buckets": n_buckets,
-            "sort_by": list(sort_within or []),
-            "catalog": cat,
-            "schema_ddl": self._schema_ddl(df),
-            "committed_at": time.time(),
-        }
-        self._atomic_write_json(
-            os.path.join(self._manifest_dir(table), f"{snapshot_id:012d}.json"),
-            manifest,
+        return self._publish(
+            table, prev, "overwrite", data_dir,
+            bucket_by=list(bucket_by),
+            n_buckets=n_buckets,
+            sort_by=list(sort_within or []),
+            catalog=cat,
+            schema_ddl=self._schema_ddl(df),
         )
-        return snapshot_id
 
     def compact(
         self,
@@ -311,13 +363,8 @@ class TableIO:
         the same committed table); the dispatch here forwards to a
         plain ``partitionedBy(bucket(N, col))`` createOrReplace."""
         if self.backend == "iceberg":
-            from pyspark.sql import functions as F
-
-            w = df.writeTo(table).partitionedBy(
-                F.bucket(n_buckets, bucket_by[0]),
-                *[F.col(c) for c in bucket_by[1:]],
-            )
-            w.createOrReplace()
+            spec = _iceberg_bucket(n_buckets, bucket_by)
+            df.writeTo(table).partitionedBy(spec).createOrReplace()
             return
         path = os.path.join(self._tdir(table), "bucketed")
         w = (
@@ -366,6 +413,10 @@ class TableIO:
             for d in snap["dirs"][1:]:
                 out = out.unionByName(self.spark.read.parquet(d))
             return out
+        if "schema" in snap:
+            # the committed schema, pinned: no schema-inference job
+            schema = StructType.fromJson(snap["schema"])
+            return self.spark.read.schema(schema).parquet(*snap["dirs"])
         return self.spark.read.parquet(*snap["dirs"])
 
     def exists(self, table: str) -> bool:

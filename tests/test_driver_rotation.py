@@ -44,16 +44,14 @@ def test_unrecorded_qkeys_inside_driver_cap():
     past_cap = [n for n in unrecorded if n not in set(names[:DRIVER_CAP])]
     assert past_cap == [], (
         f"qkeys with no green driver record sit past the {DRIVER_CAP}-key "
-        f"driver cap and would never be recorded: {past_cap} — move them "
-        "to the head of queries._PRIORITY"
+        f"driver cap and would never be recorded: {past_cap} — check "
+        "queries._rotation_order"
     )
 
 
 def test_priority_covers_registry_exactly():
-    """_PRIORITY must enumerate the registry without dangling names —
-    the assert inside _ordered_names is exercised on import, this pins
-    the inverse (no registered key silently missing from the rotation's
-    explicit ordering)."""
+    """_PRIORITY must enumerate the registry exactly: no dangling names
+    and no registered key missing from the rotation's ordering."""
     from dedup import queries as q
 
     assert set(q._PRIORITY) == set(q.REGISTRY), (
@@ -80,9 +78,9 @@ def test_rotation_is_oldest_record_first():
     """Round-4 verdict item 1: with more keys than the 50-record cap,
     the cap must always land on the STALEST keys — unrecorded keys
     first, then newest-green-record round non-decreasing along the
-    whole list. (When a new CORRECTNESS_r*.json lands, this fails until
-    queries._PRIORITY is re-rotated — by design, same as the
-    unrecorded-inside-cap rule above.)"""
+    whole list. queries._PRIORITY is derived from the same records at
+    import, so a newly committed CORRECTNESS_r*.json re-rotates it; this
+    pins the derivation against an independent reading of the files."""
     import __spark_entry__ as e
 
     names = list(e.queries())
@@ -95,6 +93,6 @@ def test_rotation_is_oldest_record_first():
     ]
     assert violations == [], (
         "rotation not oldest-record-first (prev_key, prev_round, key, "
-        f"round): {violations[:5]} — reorder queries._PRIORITY so keys "
-        "with older newest-records come first"
+        f"round): {violations[:5]} — queries._rotation_order must put keys "
+        "with older newest-records first"
     )

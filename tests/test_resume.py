@@ -219,11 +219,35 @@ def test_iceberg_backend_dispatch(spark, tmp_path):
         def read(self):
             return ReaderStub(self._log)
 
+        def createDataFrame(self, data):
+            self._log.append(("createDataFrame", data.num_rows))
+            return DFStub(self._log)
+
+    import pyarrow as pa
+
+    from dedup.lineage import metrics_table
+
     log = []
     tio = TableIO(SparkStub(log), str(tmp_path / "wh_ice"), backend="iceberg")
     tio.write(DFStub(log), "db.t", mode="append")
     tio.write(DFStub(log), "db.t", mode="overwrite")
     assert ("append", "db.t") in log and ("createOrReplace", "db.t") in log
+    # driver-side audit rows (a pyarrow.Table) append through a frame
+    tio.write(metrics_table("r", "s", {"rows": 3}), "db.metrics", mode="append")
+    assert log[-2:] == [("createDataFrame", 1), ("append", "db.metrics")]
+    # iceberg's bucket transform takes one column: a column set must
+    # raise, not quietly turn the extra columns into identity partitions
+    for write in (
+        lambda: tio.write(
+            DFStub(log), "db.b", mode="overwrite", bucket_by=["a", "b"], n_buckets=4
+        ),
+        lambda: tio.write_bucketed(DFStub(log), "db.b", ["a", "b"], 4),
+    ):
+        with pytest.raises(ValueError, match="exactly one column"):
+            write()
+    assert not any(e[-1] == "db.b" for e in log)
+    with pytest.raises(ValueError, match="plain appends"):
+        tio.write(pa.table({"v": [1]}), "db.t", mode="overwrite")
     assert tio.read("db.t", snapshot_id=7) == "df"
     fmt = [e for e in log if e[0] == "format"]
     loads = [e for e in log if e[0] == "load"]
@@ -381,3 +405,129 @@ def test_bucketed_table_append_rejected_and_compact_noop(spark, tio):
     assert tio.compact("bt", target_files=64) == s0
     assert tio.latest("bt")["snapshot_id"] == s0  # no new snapshot
     assert tio.read("bt").count() == 100
+
+
+def test_stage_commit_bookkeeping_is_one_job(spark, tiny_pages_df, tmp_path):
+    """After a stage's own commit, its bookkeeping — read-back, lineage,
+    metrics — launches exactly ONE Spark job (the lineage collect). The
+    lineage rows_out of each stage sum to its committed row count, the
+    metrics ``rows`` value equals that sum, and every committed table's
+    pinned read schema is the schema Spark infers from its files."""
+    import uuid
+
+    from jobs.run_dedup import run
+
+    sc = spark.sparkContext
+    tag = uuid.uuid4().hex[:8]
+
+    class GroupedTIO(TableIO):
+        # every job between a stage table's commit and its resume
+        # marker runs under that stage's bookkeeping job group
+        def write(self, df, table, *a, **k):
+            snap = super().write(df, table, *a, **k)
+            if table not in ("lineage", "metrics"):
+                sc.setLocalProperty("spark.jobGroup.id", f"bk-{tag}-{table}")
+            return snap
+
+        def mark_stage(self, *a):
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            super().mark_stage(*a)
+
+    tio = GroupedTIO(spark, str(tmp_path / "whJ"), backend="parquet")
+    try:
+        r = run(spark, tio, DEFAULT_CONFIG, "runJ", _pages(spark, tiny_pages_df))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    stages = ["docs", "signatures", "edges", "clusters", "report"]
+    assert r.ran == stages
+    st = sc.statusTracker()
+    jobs = {s: len(st.getJobIdsForGroup(f"bk-{tag}-{s}")) for s in stages}
+    assert jobs == dict.fromkeys(stages, 1), jobs
+
+    lineage = tio.read("lineage").collect()
+    rows = {
+        m.stage: m.value
+        for m in tio.read("metrics").filter("key = 'rows'").collect()
+    }
+    assert set(rows) == set(stages)
+    for s in stages:
+        n = tio.read(s).count()
+        assert sum(x.rows_out for x in lineage if x.stage == s) == n, s
+        assert rows[s] == n, s
+    for t in [*stages, "lineage", "metrics"]:
+        m = tio.latest(t)
+        assert "schema" in m, t
+        assert tio.read(t).schema == spark.read.parquet(*m["dirs"]).schema, t
+
+
+def test_plain_read_is_schema_pinned_and_old_manifests_infer(spark, tio):
+    """A plain snapshot's read launches no Spark job (the committed
+    schema is pinned); a manifest in the older format — no ``schema``
+    key — still reads the same rows and schema, by inference."""
+    import json
+    import os
+    import uuid
+
+    df = spark.range(20).selectExpr(
+        "id AS doc_id", "CAST(id % 3 AS INT) AS k", "array(id, id) AS a",
+        "CAST(id AS STRING) AS s", "CAST(id AS TIMESTAMP) AS ts",
+    )
+    s0 = tio.write(df, "pin", mode="overwrite")
+    sc, group = spark.sparkContext, f"read-{uuid.uuid4().hex[:8]}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = tio.read("pin")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    want = sorted(out.collect())
+
+    path = os.path.join(tio._manifest_dir("pin"), f"{s0:012d}.json")
+    with open(path) as f:
+        m = json.load(f)
+    del m["schema"]
+    with open(path, "w") as f:
+        json.dump(m, f)
+    old = tio.read("pin")
+    assert old.schema == out.schema
+    assert sorted(old.collect()) == want
+
+
+def test_arrow_append_commits_like_a_dataframe_append(spark, tio):
+    """A pyarrow.Table append lands as one more snapshot of the same
+    table: rows and read schema as if a DataFrame had been appended.
+    It is a plain append only — onto a partitioned or bucketed table,
+    or in any other mode, it raises like the existing layout guards."""
+    from pyspark.sql import functions as F
+
+    from dedup.lineage import metrics_rows, metrics_table
+    from dedup.schema import METRICS
+
+    tio.write(
+        spark.createDataFrame(metrics_rows("r", "a", {"x": 1}), METRICS),
+        "m", mode="append",
+    )
+    s1 = tio.write(metrics_table("r", "b", {"y": 2, "z": 3}), "m", mode="append")
+    assert s1 == 1
+    out = tio.read("m")
+    assert sorted(tuple(x) for x in out.collect()) == [
+        ("r", "a", "x", 1.0), ("r", "b", "y", 2.0), ("r", "b", "z", 3.0),
+    ]
+    assert out.schema == spark.read.parquet(*tio.latest("m")["dirs"]).schema
+    assert tio.read("m", 0).count() == 1  # time travel
+
+    tbl = metrics_table("r", "c", {"w": 4})
+    with pytest.raises(ValueError, match="plain appends"):
+        tio.write(tbl, "m", mode="overwrite")
+    with pytest.raises(ValueError, match="plain appends"):
+        tio.write(tbl, "m2", mode="append", partition_by=["stage"])
+    part = spark.range(4).select(
+        F.col("id").alias("doc_id"), (F.col("id") % 2).cast("string").alias("lang")
+    )
+    tio.write(part, "pt", mode="append", partition_by=["lang"])
+    with pytest.raises(ValueError, match="layouts must match"):
+        tio.write(tbl, "pt", mode="append")
+    tio.write(part, "bt", mode="overwrite", bucket_by=["doc_id"], n_buckets=2)
+    with pytest.raises(ValueError, match="bucketed"):
+        tio.write(tbl, "bt", mode="append")
+    assert [s["snapshot_id"] for s in tio.snapshots("m")] == [0, 1]
