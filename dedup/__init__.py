@@ -11,7 +11,10 @@ and the design derives solely from the BASELINE.json specification and
 public MinHash/SimHash/LSH literature.
 """
 
+from dedup import worker as _worker
 from dedup.config import DedupConfig, DEFAULT_CONFIG, HIGH_RECALL_CONFIG
+
+_worker.install()
 
 __all__ = [
     "DedupConfig",

@@ -15,7 +15,8 @@ Scale discipline (SURVEY §4.2): every iteration ends in
 ``localCheckpoint(eager=True)`` to truncate lineage — the classic
 failure of iterative DataFrame algorithms is exponential plan blowup.
 Convergence is detected by counting changed labels (an aggregate, not
-a collect of data rows). Labels only ever decrease, so the final
+a collect of data rows); if ``max_iter`` runs out first the loop raises
+rather than return unconverged labels. Labels only ever decrease, so the final
 comp = min doc_id of the component — the stable, deterministic
 cluster labeling rule (SURVEY §1.2).
 """
@@ -144,6 +145,7 @@ def _cc_loop(e: DataFrame, max_iter: int, verbose: bool) -> DataFrame:
         .withColumn("comp", F.col("id"))
         .localCheckpoint(eager=True)
     )
+    changed = None
     for it in range(max_iter):
         # 1. neighbor-min pass
         nbr = (
@@ -178,6 +180,12 @@ def _cc_loop(e: DataFrame, max_iter: int, verbose: bool) -> DataFrame:
             print(f"[cc] iter={it} changed={changed}")
         if changed == 0:
             break
+    if changed != 0:
+        # unconverged labels are wrong clusters, not approximate ones
+        raise RuntimeError(
+            f"connected components did not converge: {changed} labels "
+            f"still changed after max_iter={max_iter} iterations"
+        )
     return labels.select(F.col("id").alias("doc_id"), F.col("comp").alias("cluster_id"))
 
 

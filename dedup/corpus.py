@@ -528,8 +528,10 @@ def stratified_sample(
 
     Thresholds are ``round(rate * SAMPLE_DENOM)`` (nearest integer, not
     truncation): a non-dyadic rate like 0.1 maps to 104858/2^20, the
-    closest representable keep rate — any external oracle must mirror
-    the same rounding. Dyadic rates are exact either way."""
+    closest representable keep rate. Python's ``round()`` breaks an
+    exact .5 tie half-to-even (banker's rounding), not half-up as SQL
+    ``round`` does — any external oracle must mirror that rule on the
+    double product. Dyadic rates are exact either way."""
     thr = F.lit(int(round(default_rate * SAMPLE_DENOM)))
     for stratum, rate in sorted(rates.items()):
         thr = F.when(

@@ -124,15 +124,17 @@ def dedup_stages(
     # committed signature table is the SLIM form (band hashes + byte-packed
     # est prefix + simhash): 2.5× less I/O than full-width minhash, and
     # everything downstream — banding, est prefilter, simhash blocking —
-    # reads only it. Same fused flow as pipeline.build_edges.
-    def mk_sigs():
-        return range_partition_by_sig_prefix(
-            with_slim_signatures(representatives(docs, cfg), cfg)
+    # reads only it. Same fused flow as pipeline.build_edges. The kernel
+    # output is persisted under the range partitioner: its bound-sampling
+    # jobs would otherwise each re-run the signature kernel.
+    kernel = with_slim_signatures(representatives(docs, cfg), cfg).persist()
+    try:
+        sigs = r.stage(
+            "signatures", lambda: range_partition_by_sig_prefix(kernel),
+            sort_within=["doc_id"], extra_key=extra_key,
         )
-
-    sigs = r.stage(
-        "signatures", mk_sigs, sort_within=["doc_id"], extra_key=extra_key
-    )
+    finally:
+        kernel.unpersist()
 
     def mk_edges():
         bands, _hot = cap_buckets(with_bands(sigs, cfg), cfg.bucket_cap)

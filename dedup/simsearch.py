@@ -738,17 +738,24 @@ def pq_topk(vecs: DataFrame, queries: DataFrame, k: int, m: int = 8,
             adist = np.zeros((q_mat.shape[0], n))
             for s in range(m):
                 adist += tables[:, s, code_mat[:, s]]
+            # self is masked before the cut, so an in-corpus query still
+            # gets k rows; the cut orders by the output key (6-dp adist,
+            # n_id), so the partials do not depend on batch layout
+            adist = np.round(adist, 6)
+            adist[q_ids[:, None] == nid[None, :]] = np.inf
             top = min(k, n)
-            part = np.argpartition(adist, top - 1, axis=1)[:, :top]
+            part = np.lexsort(
+                (np.broadcast_to(nid, adist.shape), adist), axis=1
+            )[:, :top]
             qq = np.repeat(q_ids, top)
             nn = nid[part.reshape(-1)]
             dd = np.take_along_axis(adist, part, axis=1).reshape(-1)
-            keep = qq != nn
+            keep = np.isfinite(dd)
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array(qq[keep], pa.int64()),
                     pa.array(nn[keep], pa.int64()),
-                    pa.array(np.round(dd[keep], 6), pa.float64()),
+                    pa.array(dd[keep], pa.float64()),
                 ],
                 schema=pa.schema(
                     [

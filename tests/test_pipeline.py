@@ -140,6 +140,22 @@ def test_cc_single_task_equals_loop(spark):
             assert c == min(members)
 
 
+def test_cc_loop_raises_when_capped_unconverged(spark):
+    """The iterative loop never returns unconverged labels: one
+    iteration on a 20-node chain raises, naming the cap and the
+    changed count; the default cap converges to min-doc_id labels."""
+    from dedup.components import connected_components
+
+    chain = spark.createDataFrame([(i, i + 1) for i in range(19)], ["src", "dst"])
+    with pytest.raises(RuntimeError, match=r"labels still changed after max_iter=1 "):
+        connected_components(chain, max_iter=1, small_graph_edges=0).collect()
+    got = {
+        (r.doc_id, r.cluster_id)
+        for r in connected_components(chain, small_graph_edges=0).collect()
+    }
+    assert got == {(i, 0) for i in range(20)}
+
+
 def test_latest_by_url_equals_asof_window(spark):
     """The map-side-combinable ``max_by`` latest-capture pick must choose
     exactly the window idiom's winner — including duplicate urls, equal

@@ -531,3 +531,32 @@ def test_arrow_append_commits_like_a_dataframe_append(spark, tio):
     with pytest.raises(ValueError, match="bucketed"):
         tio.write(tbl, "bt", mode="append")
     assert [s["snapshot_id"] for s in tio.snapshots("m")] == [0, 1]
+
+
+def test_job_signature_kernel_runs_once(spark, tiny_pages_df, tmp_path, monkeypatch):
+    """The signatures stage runs its kernel once per representative:
+    the range partitioner's bound-sampling jobs read the persisted
+    kernel output instead of re-running it."""
+    from dedup import jobrunner
+    from jobs.run_dedup import run
+
+    seen = spark.sparkContext.accumulator(0)
+    kernel = jobrunner.with_slim_signatures
+
+    def counted(reps, cfg):
+        out = kernel(reps, cfg)
+
+        def count(batches):
+            for pdf in batches:
+                seen.add(len(pdf))
+                yield pdf
+
+        return out.mapInPandas(count, out.schema)
+
+    monkeypatch.setattr(jobrunner, "with_slim_signatures", counted)
+    tio = TableIO(spark, str(tmp_path / "whK"), backend="parquet")
+    r = run(spark, tio, DEFAULT_CONFIG, "runK", _pages(spark, tiny_pages_df))
+    assert "signatures" in r.ran
+    n_reps = tio.read("signatures").count()
+    assert n_reps > 0
+    assert seen.value == n_reps, (seen.value, n_reps)

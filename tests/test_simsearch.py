@@ -436,3 +436,25 @@ def test_pq_topk_planted_twin_recall(spark, vecs):
 
     per_q = Counter(r.q_id for r in out)
     assert all(v == 5 for v in per_q.values())
+
+
+def test_pq_topk_in_corpus_queries_get_k_rows(spark, vecs):
+    """In-corpus queries on a single-batch corpus get exactly k
+    neighbours, never themselves (self is masked before the per-batch
+    cut), and the result does not depend on the batch layout."""
+    from collections import Counter
+
+    from dedup.simsearch import pq_codebook, pq_topk
+
+    k = 5
+    corpus = vecs.orderBy("vec_id").limit(200).coalesce(1).cache()
+    queries = corpus.filter(F.col("vec_id") < 10)
+    cb = pq_codebook(corpus, 16)
+    one = pq_topk(corpus, queries, k=k, codebook=cb).collect()
+    per_q = Counter(r.q_id for r in one)
+    assert set(per_q) == {r.vec_id for r in queries.collect()}
+    assert all(v == k for v in per_q.values()), per_q
+    assert all(r.q_id != r.n_id for r in one)
+    many = pq_topk(corpus.repartition(4), queries, k=k, codebook=cb).collect()
+    assert sorted(many) == sorted(one)
+    corpus.unpersist()
