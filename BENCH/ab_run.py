@@ -2,11 +2,8 @@
 arbitrary extra Spark conf, reusing the cached 500k-page corpus.
 
 Usage: python BENCH/ab_run.py --cores 16 --runs 2 [--conf k=v ...]
-       [--ab-fuse]   # interleave fuse_ingest_sigs off/on per warm run
-Prints one line per warm run + the best (per arm when interleaving).
-Interleaved arms share one session and alternate run-by-run, so both
-see the same host-noise distribution (CLAUDE.md protocol); the
-cluster-count assert doubles as an end-to-end parity check at 500k.
+Prints one line per warm run + the best. The cluster-count assert
+doubles as an end-to-end parity check at 500k.
 """
 
 from __future__ import annotations
@@ -27,7 +24,6 @@ def main() -> None:
     ap.add_argument("--runs", type=int, default=2)
     ap.add_argument("--n-docs", type=int, default=500_000)
     ap.add_argument("--conf", action="append", default=[])
-    ap.add_argument("--ab-fuse", action="store_true")
     args = ap.parse_args()
 
     path = os.path.join("/tmp", f"bench_pages_{args.n_docs}")
@@ -48,12 +44,12 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    def once(fuse: bool | None = None) -> tuple[float, int]:
+    def once() -> tuple[float, int]:
         from dedup.pipeline import job_desc
 
         pages = spark.read.parquet(path)
         t0 = time.perf_counter()
-        res = run_dedup(pages, DEFAULT_CONFIG, fuse_ingest_sigs=fuse)
+        res = run_dedup(pages, DEFAULT_CONFIG)
         with job_desc(spark, "dedup: clusters distinct (harness)"):
             n = res.clusters.select("cluster_id").distinct().count()
         dt = time.perf_counter() - t0
@@ -64,25 +60,6 @@ def main() -> None:
 
     cold, n0 = once()
     print(f"cold={cold:.2f}s clusters={n0}", flush=True)
-    if args.ab_fuse:
-        arms: dict[bool, list[float]] = {False: [], True: []}
-        for i in range(args.runs):
-            for fuse in (False, True):
-                dt, n = once(fuse)
-                assert n == n0, (n, n0)  # end-to-end parity across arms
-                arms[fuse].append(dt)
-                print(
-                    f"warm[{i}] fuse={int(fuse)} {dt:.2f}s "
-                    f"load={os.getloadavg()}",
-                    flush=True,
-                )
-        for fuse, ts in arms.items():
-            print(
-                f"ARM fuse={int(fuse)} cores={args.cores} "
-                f"best={min(ts):.2f}s all={sorted(round(t, 2) for t in ts)}"
-            )
-        spark.stop()
-        return
     times = []
     for i in range(args.runs):
         dt, n = once()

@@ -224,7 +224,7 @@ def simhash_candidates_arrow(
     signatures: DataFrame, cfg: DedupConfig, dedupe: bool = True
 ) -> DataFrame:
     """Pair-set-identical to ``simhash_candidates`` (asserted by
-    tests/test_verify_arrow.py), built for skewed chunk buckets: explode
+    tests/test_edge_tiers.py), built for skewed chunk buckets: explode
     to (chunk_idx, chunk_val) rows JVM-side, shuffle ONCE on the chunk
     key, then scan each sorted partition in numpy — equal-key runs are
     evaluated as blocked xor/popcount matrix slices (~1 ns/pair) instead
@@ -282,25 +282,12 @@ def simhash_candidates_arrow(
         # bucket, so any sort kind yields the identical pair set
         order_k = np.argsort(ck)
         ck, doc, sim, nsh = ck[order_k], doc[order_k], sim[order_k], nsh[order_k]
-        # same vectorized within-bucket pair enumeration as the LSH
-        # kernel (row i pairs with i+d iff d < rem[i]): the former
-        # per-row python loop cost ~40 µs/row on correlated buckets —
-        # 13× the LSH kernel's per-row cost — because every row paid
-        # python dispatch for a few-element numpy slice
+        # vectorized within-bucket pair enumeration: the former per-row
+        # python loop cost ~40 µs/row on correlated buckets — 13× the
+        # LSH kernel's per-row cost — because every row paid python
+        # dispatch for a few-element numpy slice
         srcs, dsts = [], []
-        starts = np.flatnonzero(np.diff(ck, prepend=ck[0] - 1))
-        sizes = np.diff(np.append(starts, n))
-        pos = np.arange(n, dtype=np.int64) - np.repeat(starts, sizes)
-        rem = np.repeat(sizes, sizes) - pos
-        order = np.argsort(rem, kind="stable")
-        rem_sorted = rem[order]
-        d = 1
-        while True:
-            k = n - np.searchsorted(rem_sorted, d, side="right")
-            if k == 0:
-                break
-            ia = order[n - k :]
-            ib = ia + d
+        for ia, ib in _pair_blocks(ck):
             x = sim[ia] ^ sim[ib]
             lo = np.minimum(nsh[ia], nsh[ib])
             hi = np.maximum(nsh[ia], nsh[ib])
@@ -309,7 +296,6 @@ def simhash_candidates_arrow(
                 ia, ib = ia[keep], ib[keep]
                 srcs.append(np.minimum(doc[ia], doc[ib]))
                 dsts.append(np.maximum(doc[ia], doc[ib]))
-            d += 1
         if srcs:
             src = np.concatenate(srcs)
             dst = np.concatenate(dsts)
@@ -329,8 +315,7 @@ def _pair_blocks(key):
     as (row, row+d): row i pairs with i+d iff d < rem[i]. Rows sorted by
     rem give a shrinking suffix per distance — total index work = Σ
     pairs, with max-bucket-size python iterations (bounded, vectorized).
-    Shared by all three candidate kernels so the enumeration exists
-    once."""
+    Shared by every candidate kernel so the enumeration exists once."""
     import numpy as np
 
     n = len(key)
@@ -358,53 +343,41 @@ def _pair_blocks(key):
 BROADCAST_SIDEBAND_MAX_BYTES = 256 << 20
 
 
-def estimate_sideband_bytes(n_docs: int, cfg: DedupConfig,
-                            with_bands: bool = True,
-                            full_width: bool = True) -> int:
-    """Estimated bytes of the ``sig_lookup_arrays`` broadcast for the
-    selected layout: ids+nsh+simhash (24 B) + packed MinHash low bytes
-    (num_perm if the in-kernel stage-2 refine ships the full width,
-    else 32) + with_bands adds the band-hash matrix (8·bands), the
-    presorted LSH entry order (4·bands) and the simhash chunk order
-    (4·(hamming_thresh+1)). Gating on BYTES rather than a doc count
-    keeps the worker-side materialized copy bounded when a config widens
-    the sideband (round-2 advice: the 1M-doc gate alone allowed ~380 MB
-    per Python worker)."""
-    per_doc = 24 + (cfg.num_perm if full_width else 32)
-    if with_bands:
-        per_doc += 12 * cfg.bands + 4 * (cfg.hamming_thresh + 1)
+def estimate_sideband_bytes(n_docs: int, cfg: DedupConfig) -> int:
+    """Estimated bytes of the ``sig_lookup_arrays`` broadcast: ids +
+    nsh + simhash (24 B) + the full packed MinHash low bytes (num_perm,
+    shipped for the in-kernel stage-2 refine) + the band-hash matrix
+    (8·bands), the presorted LSH entry order (4·bands) and the simhash
+    chunk order (4·(hamming_thresh+1)). Gating on BYTES rather than a
+    doc count keeps the worker-side materialized copy bounded when a
+    config widens the sideband (round-2 advice: the 1M-doc gate alone
+    allowed ~380 MB per Python worker)."""
+    per_doc = 24 + cfg.num_perm + 12 * cfg.bands + 4 * (cfg.hamming_thresh + 1)
     return n_docs * per_doc
 
 
 def sig_lookup_arrays(
     signatures: DataFrame,
-    with_bands: bool = False,
+    cfg: DedupConfig,
     parquet_dir: str | None = None,
-    cfg: DedupConfig | None = None,
-    sorted_ids: bool = True,
 ) -> dict:
-    """Driver-side collect of the slim signature frame into doc_id-sorted
-    numpy lookup arrays — the broadcast sideband of the ``*_lookup``
-    candidate kernels. ~56 B/doc (id + n_shingles + simhash + 32
-    byte-packed MinHash low bytes): ≤ ~56 MB at the 1M-doc
-    BROADCAST_SIGS_MAX gate. ``with_bands`` additionally packs the LSH
-    band-hash matrix (+8·bands B/doc) for ``fused_candidates_bcast``,
-    which enumerates buckets straight off the broadcast with no
-    exchange at all. Beyond the gate the kernels' shuffle-path twins
-    carry the metadata through the exchange instead (the 10^12-doc
-    design path — no driver collect at scale)."""
+    """Driver-side collect of the slim signature frame into the numpy
+    sideband ``fused_candidates_bcast`` broadcasts: ids, n_shingles,
+    simhash, the byte-packed MinHash low bytes, the LSH band-hash matrix
+    (8·bands B/doc) and the presorted LSH / simhash-chunk entry orders.
+    Every array stays in FILE order — the kernel indexes rows
+    positionally and never searches ids. Beyond the broadcast gate the
+    shuffle-path kernels carry the metadata through the exchange
+    instead (the 10^12-doc design path — no driver collect at scale)."""
     import numpy as np
 
     import re as _re
 
-    all_pres = sorted(
+    pres = sorted(
         (c for c in signatures.columns if _re.fullmatch(r"pre\d+", c)),
         key=lambda c: int(c[3:]),
     )
-    pres = all_pres[:4] if not with_bands else all_pres
-    cols = ["doc_id", "n_shingles", "simhash", *pres]
-    if with_bands:
-        cols.append("band_hashes")
+    cols = ["doc_id", "n_shingles", "simhash", *pres, "band_hashes"]
     if parquet_dir is not None:
         # Fast path when the frame is a pipeline spill: read the parquet
         # files natively (multi-threaded Arrow reader, tmpfs-resident) —
@@ -422,28 +395,16 @@ def sig_lookup_arrays(
     # The build is on the pipeline's critical path (every executor idles
     # while the driver assembles the sideband — profiled 4.2 s of the
     # 24.5 s warm wall at 500k/local[32]), and its heavy pieces — the
-    # pre-matrix stack/gather, the 8M-entry band-key argsort, the
-    # simhash chunk-key argsort — are independent numpy calls that
-    # release the GIL. Run them in a small thread pool; dependencies
-    # (everything needs `order`, sim orders need the sim gather) are
-    # expressed by submission order.
+    # pre-matrix stack, the 8M-entry band-key argsort, the simhash
+    # chunk-key argsort — are independent numpy calls that release the
+    # GIL. Run them in a small thread pool.
     from concurrent.futures import ThreadPoolExecutor
 
-    # ``sorted_ids=False`` keeps every array in FILE order: only the
-    # ``*_lookup`` kernels binary-search ids (they need the sort); the
-    # fused broadcast kernel indexes rows positionally, and skipping
-    # the argsort + five 64 MB-class gathers halves the critical-path
-    # build time.
     ids = col("doc_id", np.int64)
-    if sorted_ids:
-        order = np.argsort(ids)
-        gather = lambda a: a[order]  # noqa: E731
-    else:
-        gather = lambda a: a  # noqa: E731
-    out = {"ids": gather(ids)}
+    out = {"ids": ids}
 
     def build_pre():
-        pre = gather(np.column_stack([col(c, np.int64) for c in pres]))
+        pre = np.column_stack([col(c, np.int64) for c in pres])
         return np.ascontiguousarray(pre).view(np.uint8)
 
     def build_bands():
@@ -454,21 +415,18 @@ def sig_lookup_arrays(
         offs = ch.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
         vals = ch.values.to_numpy(zero_copy_only=False).astype(np.int64)
         b = int(offs[1] - offs[0]) if len(offs) > 1 else 0
-        bands = np.ascontiguousarray(gather(vals[offs[0] :].reshape(len(ids), b)))
-        if cfg is None:
-            return bands, None
-        # Presorted sideband for fused_candidates_bcast: entries of
-        # each key space globally argsorted ONCE here — a kernel task
-        # gathers only its contiguous 1/P of the entry space (snapping
-        # its own range ends to bucket boundaries in-kernel) and its
-        # keys arrive already sorted. The earlier per-task design (mix
-        # + full-space selection scan per task) made task-time grow
-        # with the task COUNT — total candidate task-seconds inflated
-        # 4.5× going 8→32 cores on identical work.
-        order_lsh = np.argsort(bands.reshape(-1))
-        return bands, order_lsh.astype(np.uint32)
+        bands = np.ascontiguousarray(vals[offs[0] :].reshape(len(ids), b))
+        # Presorted sideband: entries of each key space globally
+        # argsorted ONCE here — a kernel task gathers only its
+        # contiguous 1/P of the entry space (snapping its own range ends
+        # to bucket boundaries in-kernel) and its keys arrive already
+        # sorted. The earlier per-task design (mix + full-space
+        # selection scan per task) made task-time grow with the task
+        # COUNT — total candidate task-seconds inflated 4.5× going 8→32
+        # cores on identical work.
+        return bands, np.argsort(bands.reshape(-1)).astype(np.uint32)
 
-    def build_sim_orders(sim):
+    def build_sim_order(sim):
         n_chunks = cfg.hamming_thresh + 1
         width = cfg.simhash_bits // n_chunks
         ck_flat = simhash_chunk_keys(sim, n_chunks, width).reshape(-1)
@@ -476,19 +434,13 @@ def sig_lookup_arrays(
 
     with ThreadPoolExecutor(max_workers=3) as pool:
         fut_pre = pool.submit(build_pre)
-        fut_bands = pool.submit(build_bands) if with_bands else None
-        out["nsh"] = gather(col("n_shingles", np.int64))
-        out["sim"] = gather(col("simhash", np.int64))
-        fut_sim = (
-            pool.submit(build_sim_orders, out["sim"])
-            if with_bands and cfg is not None
-            else None
-        )
+        fut_bands = pool.submit(build_bands)
+        out["nsh"] = col("n_shingles", np.int64)
+        out["sim"] = col("simhash", np.int64)
+        fut_sim = pool.submit(build_sim_order, out["sim"])
         pre_bytes = fut_pre.result()
-        if fut_bands is not None:
-            out["bands"], order_lsh_u32 = fut_bands.result()
-        if fut_sim is not None:
-            out["order_sim"] = fut_sim.result()
+        out["bands"], out["order_lsh"] = fut_bands.result()
+        out["order_sim"] = fut_sim.result()
 
     if pre_bytes.shape[1] > 32:
         # full byte-packed MinHash width — lets the bcast kernel run the
@@ -499,16 +451,6 @@ def sig_lookup_arrays(
     else:
         # (n, 32) little-endian low bytes (stage-1 prefix), row-aligned
         out["pre"] = pre_bytes
-    if with_bands:
-        from dedup.hashing import _vfmix
-
-        if cfg is not None:
-            out["order_lsh"] = order_lsh_u32
-        else:
-            # legacy sideband: top-32 avalanche bits per LSH entry for
-            # the kernel's multiply-shift partitioner (per-task scan)
-            mixed = _vfmix(out["bands"].reshape(-1).view(np.uint64).copy())
-            out["part32_lsh"] = (mixed >> np.uint64(32)).astype(np.uint32)
     return out
 
 
@@ -535,363 +477,19 @@ def simhash_chunk_keys(sim: "np.ndarray", n_chunks: int, width: int):
     return np.column_stack(cols)
 
 
-def lsh_candidates_lookup(
-    signatures: DataFrame, lookup_bc, cfg: DedupConfig, cap: int = 0
-) -> DataFrame:
-    """Broadcast-sideband twin of ``lsh_candidates_arrow`` — identical
-    (pair, est) output (parity test in tests/test_verify_arrow.py), but
-    the band-explode exchange ships ONLY (band_hash, doc_id) rows: 16 B
-    instead of 56 B. The per-doc metadata the bucket scan needs
-    (n_shingles for the D4 ratio prune, the byte-packed MinHash longs
-    for the fused stage-1 est filter) comes from ``lookup_bc`` (a
-    ``sig_lookup_arrays`` broadcast) via one vectorized searchsorted.
-
-    Why: the explode is b rows/doc — the pipeline's biggest exchange —
-    and exchange cost (row serialization, partition-id sort, buffer
-    writes) was the worst 8→32-core task-time inflater (profiled 4.1×
-    on identical bytes); cutting bytes/row 3.5× cuts exactly that. The
-    shuffle-path twin remains the at-scale default above the broadcast
-    gate. ``cap`` > 0 folds the hot-bucket cap in-kernel (the whole
-    bucket is task-local), replacing cap_buckets' extra aggregation +
-    anti-join pass over the explode."""
-    from dedup.verify import est_floor_per_doc
-
-    p = min(cfg.est_prefilter_perms or cfg.num_perm, cfg.num_perm, 32)
-    ratio = cfg.jaccard_thresh
-    part = signatures.select(
-        "doc_id", F.explode("band_hashes").alias("band_hash")
-    ).repartition("band_hash")
-
-    def run(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        out_schema = pa.schema(
-            [
-                pa.field("src", pa.int64(), False),
-                pa.field("dst", pa.int64(), False),
-                pa.field("est_jacc", pa.float64(), False),
-            ]
-        )
-
-        def empty():
-            return pa.RecordBatch.from_arrays(
-                [
-                    pa.array([], type=pa.int64()),
-                    pa.array([], type=pa.int64()),
-                    pa.array([], type=pa.float64()),
-                ],
-                schema=out_schema,
-            )
-
-        tables = [pa.Table.from_batches([b]) for b in batches]
-        if not tables:
-            return
-        t = pa.concat_tables(tables).combine_chunks()
-        n = t.num_rows
-        if n == 0:
-            yield empty()
-            return
-        bh = t.column("band_hash").to_numpy(zero_copy_only=False).astype(np.int64)
-        doc = t.column("doc_id").to_numpy(zero_copy_only=False).astype(np.int64)
-        order_k = np.argsort(bh)
-        bh, doc = bh[order_k], doc[order_k]
-        if cap > 0:
-            starts = np.flatnonzero(np.diff(bh, prepend=bh[0] - 1))
-            sizes = np.diff(np.append(starts, n))
-            keep_rows = np.repeat(sizes <= cap, sizes)
-            bh, doc = bh[keep_rows], doc[keep_rows]
-            if len(bh) == 0:
-                yield empty()
-                return
-        lk = lookup_bc.value
-        pos = np.searchsorted(lk["ids"], doc)
-        nsh = lk["nsh"][pos]
-        fl = est_floor_per_doc(cfg, p, nsh)
-        pre = _pre32(lk)[pos]
-        srcs, dsts, ests = [], [], []
-        for ia, ib in _pair_blocks(bh):
-            lo = np.minimum(nsh[ia], nsh[ib])
-            hi = np.maximum(nsh[ia], nsh[ib])
-            keep = lo >= hi * ratio  # D4 length-ratio prune (exact-safe)
-            if keep.any():
-                ia, ib = ia[keep], ib[keep]
-                eq = (pre[ia] == pre[ib]).sum(axis=1, dtype=np.int64)
-                est = (eq - (32 - p)) / float(p)
-                keep2 = est >= np.minimum(fl[ia], fl[ib])
-                if keep2.any():
-                    ia, ib, est = ia[keep2], ib[keep2], est[keep2]
-                    srcs.append(np.minimum(doc[ia], doc[ib]))
-                    dsts.append(np.maximum(doc[ia], doc[ib]))
-                    ests.append(est)
-        if not srcs:
-            yield empty()
-            return
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(np.concatenate(srcs)),
-                pa.array(np.concatenate(dsts)),
-                pa.array(np.concatenate(ests)),
-            ],
-            schema=out_schema,
-        )
-
-    return part.mapInArrow(run, schema="src long, dst long, est_jacc double")
-
-
-def simhash_candidates_lookup(
-    signatures: DataFrame, lookup_bc, cfg: DedupConfig
-) -> DataFrame:
-    """Broadcast-sideband twin of ``est_filter_pairs(
-    simhash_candidates_arrow(sigs, cfg, dedupe=False), sigs, cfg)`` —
-    identical (pair, est) output (parity test). The chunk explode ships
-    ONLY (ck, doc_id); simhash + n_shingles + packed MinHash bytes come
-    from the broadcast lookup, and the stage-1 est filter runs fused in
-    the scan — the two pre-col joins over the simhash pair flood
-    disappear. Shuffle-path twin remains the at-scale default above the
-    broadcast gate."""
-    from dedup.verify import est_floor_per_doc
-
-    n_chunks = cfg.hamming_thresh + 1
-    width = cfg.simhash_bits // n_chunks
-    h = cfg.hamming_thresh
-    ratio = cfg.jaccard_thresh
-    p = min(cfg.est_prefilter_perms or cfg.num_perm, cfg.num_perm, 32)
-    chunk_keys = F.expr(
-        f"transform(sequence(0, {n_chunks - 1}),"
-        f" i -> shiftleft(cast(i as bigint), {width})"
-        f"      | (shiftright(simhash, i*{width}) & {(1 << width) - 1}))"
-    )
-    part = signatures.select(
-        "doc_id", F.explode(chunk_keys).alias("ck")
-    ).repartition("ck")
-
-    def run(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        from dedup.hashing import popcount64
-
-        out_schema = pa.schema(
-            [
-                pa.field("src", pa.int64(), False),
-                pa.field("dst", pa.int64(), False),
-                pa.field("est_jacc", pa.float64(), False),
-            ]
-        )
-
-        def empty():
-            return pa.RecordBatch.from_arrays(
-                [
-                    pa.array([], type=pa.int64()),
-                    pa.array([], type=pa.int64()),
-                    pa.array([], type=pa.float64()),
-                ],
-                schema=out_schema,
-            )
-
-        tables = [pa.Table.from_batches([b]) for b in batches]
-        if not tables:
-            return
-        t = pa.concat_tables(tables).combine_chunks()
-        n = t.num_rows
-        if n == 0:
-            yield empty()
-            return
-        ck = t.column("ck").to_numpy(zero_copy_only=False).astype(np.int64)
-        doc = t.column("doc_id").to_numpy(zero_copy_only=False).astype(np.int64)
-        order_k = np.argsort(ck)
-        ck, doc = ck[order_k], doc[order_k]
-        lk = lookup_bc.value
-        pos = np.searchsorted(lk["ids"], doc)
-        nsh = lk["nsh"][pos]
-        fl = est_floor_per_doc(cfg, p, nsh)
-        sim = lk["sim"][pos].view(np.uint64)
-        pre = _pre32(lk)[pos]
-        srcs, dsts, ests = [], [], []
-        for ia, ib in _pair_blocks(ck):
-            x = sim[ia] ^ sim[ib]
-            lo = np.minimum(nsh[ia], nsh[ib])
-            hi = np.maximum(nsh[ia], nsh[ib])
-            keep = (popcount64(x) <= h) & (lo >= hi * ratio)
-            if keep.any():
-                ia, ib = ia[keep], ib[keep]
-                eq = (pre[ia] == pre[ib]).sum(axis=1, dtype=np.int64)
-                est = (eq - (32 - p)) / float(p)
-                keep2 = est >= np.minimum(fl[ia], fl[ib])
-                if keep2.any():
-                    ia, ib, est = ia[keep2], ib[keep2], est[keep2]
-                    srcs.append(np.minimum(doc[ia], doc[ib]))
-                    dsts.append(np.maximum(doc[ia], doc[ib]))
-                    ests.append(est)
-        if not srcs:
-            yield empty()
-            return
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(np.concatenate(srcs)),
-                pa.array(np.concatenate(dsts)),
-                pa.array(np.concatenate(ests)),
-            ],
-            schema=out_schema,
-        )
-
-    return part.mapInArrow(run, schema="src long, dst long, est_jacc double")
-
-
-def fused_candidates_lookup(
-    signatures: DataFrame, lookup_bc, cfg: DedupConfig, cap: int = 0
-) -> DataFrame:
-    """LSH band buckets AND simhash chunk buckets in ONE exchange + ONE
-    kernel scan — (pair, est)-identical to
-    ``lsh_candidates_lookup ∪ simhash_candidates_lookup`` (parity test).
-
-    Both generators are bucket-pairing problems over (key, doc_id) rows;
-    the only differences are the key space and the per-pair filter. So
-    the explodes union into one frame tagged 0 (LSH band_hash) / 1
-    (simhash chunk key), hash-partitioned on (tag, key) — bucket
-    identity is the exact (tag, key) pair, no cross-space collisions —
-    and the kernel runs ONE distance-block enumeration over the grouped
-    partition: a pair's two rows always share a segment, hence a tag,
-    so the tag just selects which filter mask applies. Versus two
-    kernels this removes a whole exchange + AQE stage + partition scan
-    (JVM exchange overhead is the pipeline's worst 8→32-core inflater).
-    ``cap`` drops oversized LSH buckets only (simhash chunk buckets are
-    bounded by the hamming filter), matching cap_buckets semantics."""
-    from dedup.verify import est_floor_per_doc
-
-    n_chunks = cfg.hamming_thresh + 1
-    width = cfg.simhash_bits // n_chunks
-    h = cfg.hamming_thresh
-    ratio = cfg.jaccard_thresh
-    p = min(cfg.est_prefilter_perms or cfg.num_perm, cfg.num_perm, 32)
-    chunk_keys = F.expr(
-        f"transform(sequence(0, {n_chunks - 1}),"
-        f" i -> shiftleft(cast(i as bigint), {width})"
-        f"      | (shiftright(simhash, i*{width}) & {(1 << width) - 1}))"
-    )
-    ex = signatures.select(
-        "doc_id",
-        F.explode("band_hashes").alias("key"),
-        F.lit(0).cast("byte").alias("tag"),
-    ).unionByName(
-        signatures.select(
-            "doc_id",
-            F.explode(chunk_keys).alias("key"),
-            F.lit(1).cast("byte").alias("tag"),
-        )
-    )
-    part = ex.repartition("tag", "key")
-
-    def run(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        from dedup.hashing import popcount64
-
-        out_schema = pa.schema(
-            [
-                pa.field("src", pa.int64(), False),
-                pa.field("dst", pa.int64(), False),
-                pa.field("est_jacc", pa.float64(), False),
-            ]
-        )
-
-        def empty():
-            return pa.RecordBatch.from_arrays(
-                [
-                    pa.array([], type=pa.int64()),
-                    pa.array([], type=pa.int64()),
-                    pa.array([], type=pa.float64()),
-                ],
-                schema=out_schema,
-            )
-
-        tables = [pa.Table.from_batches([b]) for b in batches]
-        if not tables:
-            return
-        t = pa.concat_tables(tables).combine_chunks()
-        n = t.num_rows
-        if n == 0:
-            yield empty()
-            return
-        key = t.column("key").to_numpy(zero_copy_only=False).astype(np.int64)
-        doc = t.column("doc_id").to_numpy(zero_copy_only=False).astype(np.int64)
-        tag = t.column("tag").to_numpy(zero_copy_only=False).astype(np.int8)
-        order_k = np.lexsort((key, tag))
-        key, doc, tag = key[order_k], doc[order_k], tag[order_k]
-        # segment boundaries where (tag, key) changes; seg_key is a
-        # synthetic grouped id consumed by the shared _pair_blocks
-        change = np.empty(n, dtype=bool)
-        change[0] = True
-        change[1:] = (key[1:] != key[:-1]) | (tag[1:] != tag[:-1])
-        seg_key = np.cumsum(change) - 1
-        if cap > 0:
-            starts = np.flatnonzero(change)
-            sizes = np.diff(np.append(starts, n))
-            seg_tag = tag[starts]
-            keep_rows = np.repeat((sizes <= cap) | (seg_tag == 1), sizes)
-            if not keep_rows.all():
-                key, doc, tag, seg_key = (
-                    key[keep_rows],
-                    doc[keep_rows],
-                    tag[keep_rows],
-                    seg_key[keep_rows],
-                )
-                if len(key) == 0:
-                    yield empty()
-                    return
-        lk = lookup_bc.value
-        pos = np.searchsorted(lk["ids"], doc)
-        nsh = lk["nsh"][pos]
-        fl = est_floor_per_doc(cfg, p, nsh)
-        sim = lk["sim"][pos].view(np.uint64)
-        pre = _pre32(lk)[pos]
-        srcs, dsts, ests = [], [], []
-        for ia, ib in _pair_blocks(seg_key):
-            lo = np.minimum(nsh[ia], nsh[ib])
-            hi = np.maximum(nsh[ia], nsh[ib])
-            keep = lo >= hi * ratio  # D4 length-ratio prune (exact-safe)
-            is_sh = tag[ia] == 1  # pair sides share a segment ⇒ a tag
-            if is_sh.any():
-                keep &= ~is_sh | (popcount64(sim[ia] ^ sim[ib]) <= h)
-            if keep.any():
-                ia, ib = ia[keep], ib[keep]
-                eq = (pre[ia] == pre[ib]).sum(axis=1, dtype=np.int64)
-                est = (eq - (32 - p)) / float(p)
-                keep2 = est >= np.minimum(fl[ia], fl[ib])
-                if keep2.any():
-                    ia, ib, est = ia[keep2], ib[keep2], est[keep2]
-                    srcs.append(np.minimum(doc[ia], doc[ib]))
-                    dsts.append(np.maximum(doc[ia], doc[ib]))
-                    ests.append(est)
-        if not srcs:
-            yield empty()
-            return
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(np.concatenate(srcs)),
-                pa.array(np.concatenate(dsts)),
-                pa.array(np.concatenate(ests)),
-            ],
-            schema=out_schema,
-        )
-
-    return part.mapInArrow(run, schema="src long, dst long, est_jacc double")
-
-
 def fused_candidates_bcast(
     spark,
     lookup_bc,
     cfg: DedupConfig,
     cap: int = 0,
     n_parts: int | None = None,
-    use_simhash: bool = True,
     full_est: bool = False,
 ) -> DataFrame:
-    """Exchange-free twin of ``fused_candidates_lookup``: identical
-    (pair, est) output (parity test in tests/test_verify_arrow.py), but
-    the band/chunk explode rows never exist as JVM rows at all.
+    """Exchange-free LSH band buckets AND simhash chunk buckets in one
+    kernel over a ``sig_lookup_arrays`` broadcast: the same distinct
+    (pair, est) set as ``est_filter_pairs(lsh_candidates(cap_buckets(
+    with_bands(…))) ∪ simhash_candidates(…))`` (tests/test_edge_tiers.py),
+    but the band/chunk explode rows never exist as JVM rows at all.
 
     In the broadcast regime every task already holds ALL per-doc
     metadata; shipping 9M (bucket_key, doc_id) rows through an exchange
@@ -899,14 +497,14 @@ def fused_candidates_bcast(
     measured ~90 task-s at 500k docs, and the pipeline's worst
     8→32-core inflater) only re-delivers information the broadcast has.
     Instead ``spark.range(n_parts)`` launches one task per bucket-space
-    slice; each task rebuilds the tagged (key, owner-row) arrays from
-    the broadcast's band-hash matrix + simhash chunks (vectorized, tens
-    of ms), keeps the slice where ``mix64(key ^ tag·C) % n_parts`` ==
-    its partition id — equal (tag, key) always lands whole, so bucket
-    identity and the in-kernel cap semantics are exactly those of the
-    exchange path — and runs the same distance-block enumeration with
-    the same D4 / hamming / stage-1 est filters. Owner rows are direct
-    indices into the broadcast arrays (no searchsorted).
+    slice; each task takes its contiguous 1/n_parts of each presorted
+    key space (LSH band hashes tagged 0, simhash chunk keys tagged 1),
+    snapped to bucket boundaries so a bucket always lands whole — bucket
+    identity and the cap semantics (``cap`` drops oversized LSH buckets
+    only, as ``cap_buckets`` does) are exactly those of the exchange
+    path — and runs the shared distance-block enumeration with the D4 /
+    hamming / stage-1 est filters. Owner rows are direct indices into
+    the broadcast arrays (no searchsorted).
 
     At-scale story unchanged: above BROADCAST_SIGS_MAX the shuffle-path
     twins are the design path; this kernel is the small/medium-corpus
@@ -939,7 +537,7 @@ def fused_candidates_bcast(
         import numpy as np
         import pyarrow as pa
 
-        from dedup.hashing import popcount64, _vfmix
+        from dedup.hashing import popcount64
 
         out_schema = pa.schema(
             [
@@ -965,7 +563,7 @@ def fused_candidates_bcast(
         if full_est and pf_all is None:
             raise ValueError("full_est needs the pre_full lookup sideband")
         n_bytes_full = pf_all.shape[1] if pf_all is not None else 0
-        n_docs, b = bands.shape
+        b = bands.shape[1]
         fl_all = est_floor_per_doc(cfg, p, nsh_all)
         flf_all = (
             est_floor_per_doc(cfg, p_full, nsh_all) if pf_all is not None else None
@@ -1049,125 +647,74 @@ def fused_candidates_bcast(
             )
 
         P = int(n_parts)
-        if "order_lsh" in lk:
-            # presorted sideband: entries argsorted by key driver-side —
-            # a task gathers ONLY its contiguous 1/P of each key space
-            # (keys arrive sorted; no per-task full-space scan, whose
-            # cost grew with the task count and inflated candidate
-            # task-seconds 4.5× at 8→32). Range ends snap to bucket
-            # boundaries IN-KERNEL (scan forward past the run of equal
-            # keys): adjacent tasks compute identical boundaries, so no
-            # bucket splits and no pair is emitted twice — and the
-            # driver no longer materializes the sorted 8M-key copy just
-            # to precompute bounds (was ~1.4 s of serial build time).
-            order_l = lk["order_lsh"]
-            order_s = lk.get("order_sim")
-            mask = np.uint64((1 << width) - 1)
+        # presorted sideband: entries argsorted by key driver-side — a
+        # task gathers ONLY its contiguous 1/P of each key space (keys
+        # arrive sorted; no per-task full-space scan, whose cost grew
+        # with the task count and inflated candidate task-seconds 4.5×
+        # at 8→32). Range ends snap to bucket boundaries IN-KERNEL (scan
+        # forward past the run of equal keys): adjacent tasks compute
+        # identical boundaries, so no bucket splits and no pair is
+        # emitted twice — and the driver never materializes the sorted
+        # 8M-key copy just to precompute bounds (was ~1.4 s of serial
+        # build time).
+        order_l = lk["order_lsh"]
+        order_s = lk["order_sim"]
+        mask = np.uint64((1 << width) - 1)
 
-            def key_lsh_at(entries):
-                return key_lsh[entries.astype(np.int64)]
+        def key_lsh_at(entries):
+            return key_lsh[entries.astype(np.int64)]
 
-            def key_sim_at(entries):
-                e = entries.astype(np.int64)
-                own = e // n_chunks
-                ci = (e % n_chunks).astype(np.uint64)
-                return (ci.astype(np.int64) << width) | (
-                    (sim_all[own] >> (ci * np.uint64(width))) & mask
-                ).astype(np.int64)
+        def key_sim_at(entries):
+            e = entries.astype(np.int64)
+            own = e // n_chunks
+            ci = (e % n_chunks).astype(np.uint64)
+            return (ci.astype(np.int64) << width) | (
+                (sim_all[own] >> (ci * np.uint64(width))) & mask
+            ).astype(np.int64)
 
-            def snap(raw, order_arr, keyfn, m):
-                """Smallest bucket boundary >= raw (a run of equal keys
-                never splits; adjacent tasks agree by construction)."""
-                if raw <= 0 or raw >= m:
-                    return min(max(raw, 0), m)
-                k0 = keyfn(order_arr[raw - 1 : raw])[0]
-                if keyfn(order_arr[raw : raw + 1])[0] != k0:
-                    return raw
-                i = raw
-                while i < m:
-                    j = min(m, i + 4096)
-                    ks = keyfn(order_arr[i:j])
-                    nz = np.flatnonzero(ks != k0)
-                    if len(nz):
-                        return i + int(nz[0])
-                    i = j
-                return m
+        def snap(raw, order_arr, keyfn, m):
+            """Smallest bucket boundary >= raw (a run of equal keys
+            never splits; adjacent tasks agree by construction)."""
+            if raw <= 0 or raw >= m:
+                return min(max(raw, 0), m)
+            k0 = keyfn(order_arr[raw - 1 : raw])[0]
+            if keyfn(order_arr[raw : raw + 1])[0] != k0:
+                return raw
+            i = raw
+            while i < m:
+                j = min(m, i + 4096)
+                ks = keyfn(order_arr[i:j])
+                nz = np.flatnonzero(ks != k0)
+                if len(nz):
+                    return i + int(nz[0])
+                i = j
+            return m
 
-            m_l = len(order_l)
-            m_s = len(order_s) if order_s is not None else 0
-            for pid in my_parts:
-                srcs, dsts, ests = [], [], []
-                s0 = snap((m_l * int(pid)) // P, order_l, key_lsh_at, m_l)
-                s1 = snap((m_l * (int(pid) + 1)) // P, order_l, key_lsh_at, m_l)
-                idx = order_l[s0:s1].astype(np.int64)
-                scan(
-                    key_lsh[idx],
-                    idx // b,
-                    np.zeros(len(idx), dtype=np.int8),
-                    srcs,
-                    dsts,
-                    ests,
-                )
-                if use_simhash:
-                    u0 = snap((m_s * int(pid)) // P, order_s, key_sim_at, m_s)
-                    u1 = snap((m_s * (int(pid) + 1)) // P, order_s, key_sim_at, m_s)
-                    idx = order_s[u0:u1].astype(np.int64)
-                    own = idx // n_chunks
-                    ci = (idx % n_chunks).astype(np.uint64)
-                    k_sim = (ci.astype(np.int64) << width) | (
-                        (sim_all[own] >> (ci * np.uint64(width))) & mask
-                    ).astype(np.int64)
-                    scan(
-                        k_sim,
-                        own,
-                        np.ones(len(idx), dtype=np.int8),
-                        srcs,
-                        dsts,
-                        ests,
-                    )
-                rb = flush(srcs, dsts, ests)
-                if rb is not None:
-                    yield rb
-            return
-        # legacy sideband (no presorted orders): per-task multiply-shift
-        # selection over the precomputed top-32 mix bits
-        part_lsh = lk["part32_lsh"].astype(np.uint64)
-        if use_simhash:
-            ck = simhash_chunk_keys(lk["sim"], n_chunks, width)  # (n, nc)
-            key_sim = ck.reshape(-1)
-            # tag folds in via a constant xor pre-avalanche so an LSH
-            # band hash and a chunk key that happen to collide stay in
-            # distinct bucket-spaces deterministically
-            part_sim = _vfmix(
-                key_sim.view(np.uint64) ^ np.uint64(0x9E3779B97F4A7C15)
-            ) >> np.uint64(32)
-        Pu = np.uint64(n_parts)
+        m_l, m_s = len(order_l), len(order_s)
         for pid in my_parts:
-            upid = np.uint64(pid)
-            sel0 = np.flatnonzero((part_lsh * Pu) >> np.uint64(32) == upid)
-            ord0 = np.argsort(key_lsh[sel0])
-            sel0 = sel0[ord0]
             srcs, dsts, ests = [], [], []
+            s0 = snap((m_l * int(pid)) // P, order_l, key_lsh_at, m_l)
+            s1 = snap((m_l * (int(pid) + 1)) // P, order_l, key_lsh_at, m_l)
+            idx = order_l[s0:s1].astype(np.int64)
             scan(
-                key_lsh[sel0],
-                sel0 // b,
-                np.zeros(len(sel0), dtype=np.int8),
+                key_lsh[idx],
+                idx // b,
+                np.zeros(len(idx), dtype=np.int8),
                 srcs,
                 dsts,
                 ests,
             )
-            if use_simhash:
-                sel1 = np.flatnonzero((part_sim * Pu) >> np.uint64(32) == upid)
-                ord1 = np.argsort(key_sim[sel1])
-                sel1 = sel1[ord1]
-                scan(
-                    key_sim[sel1],
-                    sel1 // n_chunks,
-                    np.ones(len(sel1), dtype=np.int8),
-                    srcs,
-                    dsts,
-                    ests,
-                )
+            u0 = snap((m_s * int(pid)) // P, order_s, key_sim_at, m_s)
+            u1 = snap((m_s * (int(pid) + 1)) // P, order_s, key_sim_at, m_s)
+            idx = order_s[u0:u1].astype(np.int64)
+            scan(
+                key_sim_at(idx),
+                idx // n_chunks,
+                np.ones(len(idx), dtype=np.int8),
+                srcs,
+                dsts,
+                ests,
+            )
             rb = flush(srcs, dsts, ests)
             if rb is not None:
                 yield rb
@@ -1181,7 +728,7 @@ def lsh_candidates_arrow(bands_pre: DataFrame, cfg: DedupConfig) -> DataFrame:
     """LSH bucket pairing with the stage-1 estimate filter fused into a
     numpy bucket scan — pair-and-est identical to
     ``est_filter_pairs(lsh_candidates(bands, cfg, dedupe=False), sigs,
-    cfg)`` (parity test in tests/test_verify_arrow.py) but ~10× cheaper:
+    cfg)`` (parity test in tests/test_edge_tiers.py) but ~10× cheaper:
     the 40M-pair flood at 500k docs never exists as JVM join-probe rows
     (~100 ns each, and the worst 8→32-core CPU inflater); it is
     enumerated as index arrays and killed by vectorized byte compares
@@ -1253,27 +800,8 @@ def lsh_candidates_arrow(bands_pre: DataFrame, cfg: DedupConfig) -> DataFrame:
         order_k = np.argsort(bh)
         bh, doc, nsh, pre = bh[order_k], doc[order_k], nsh[order_k], pre[order_k]
         fl = est_floor_per_doc(cfg, p, nsh)
-
-        # bucket segmentation over the grouped keys
-        starts = np.flatnonzero(np.diff(bh, prepend=bh[0] - 1))
-        sizes = np.diff(np.append(starts, n))
-        pos = np.arange(n, dtype=np.int64) - np.repeat(starts, sizes)
-        rem = np.repeat(sizes, sizes) - pos  # rows below me in my bucket, +1
-
-        # enumerate every within-bucket pair exactly once as (row, row+d):
-        # row i pairs with i+d iff d < rem[i]. Rows sorted by rem give a
-        # shrinking suffix per distance — total index work = Σ pairs,
-        # with max-bucket-size python iterations (bounded, vectorized).
-        order = np.argsort(rem, kind="stable")
-        rem_sorted = rem[order]
         srcs, dsts, ests = [], [], []
-        d = 1
-        while True:
-            k = n - np.searchsorted(rem_sorted, d, side="right")
-            if k == 0:
-                break
-            ia = order[n - k :]
-            ib = ia + d
+        for ia, ib in _pair_blocks(bh):
             lo = np.minimum(nsh[ia], nsh[ib])
             hi = np.maximum(nsh[ia], nsh[ib])
             keep = lo >= hi * ratio  # D4 length-ratio prune (exact-safe)
@@ -1287,7 +815,6 @@ def lsh_candidates_arrow(bands_pre: DataFrame, cfg: DedupConfig) -> DataFrame:
                     srcs.append(np.minimum(doc[ia], doc[ib]))
                     dsts.append(np.maximum(doc[ia], doc[ib]))
                     ests.append(est)
-            d += 1
         if not srcs:
             yield empty()
             return

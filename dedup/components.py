@@ -37,7 +37,6 @@ SMALL_GRAPH_EDGES = 4_000_000
 def connected_components(
     edges: DataFrame,
     max_iter: int = 25,
-    verbose: bool = False,
     small_graph_edges: int = SMALL_GRAPH_EDGES,
 ) -> DataFrame:
     """edges(src, dst) → (doc_id, cluster_id) for every vertex that
@@ -95,7 +94,7 @@ def connected_components(
     p = min(p, default_p) if n_edges < 500_000 else max(p, default_p)
     if p != e.rdd.getNumPartitions():
         e = e.repartition(p, "dst").localCheckpoint(eager=True)
-    return _cc_loop(e, max_iter, verbose)
+    return _cc_loop(e, max_iter)
 
 
 def _cc_single_task(e: DataFrame) -> DataFrame:
@@ -138,7 +137,7 @@ def _cc_single_task(e: DataFrame) -> DataFrame:
     return e.coalesce(1).mapInPandas(run, schema="doc_id long, cluster_id long")
 
 
-def _cc_loop(e: DataFrame, max_iter: int, verbose: bool) -> DataFrame:
+def _cc_loop(e: DataFrame, max_iter: int) -> DataFrame:
     labels = (
         e.select(F.col("src").alias("id"))
         .distinct()
@@ -146,7 +145,7 @@ def _cc_loop(e: DataFrame, max_iter: int, verbose: bool) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     changed = None
-    for it in range(max_iter):
+    for _ in range(max_iter):
         # 1. neighbor-min pass
         nbr = (
             e.join(labels.withColumnRenamed("id", "dst"), "dst")
@@ -176,8 +175,6 @@ def _cc_loop(e: DataFrame, max_iter: int, verbose: bool) -> DataFrame:
         )
         changed = new_labels.filter(F.col("comp") != F.col("prev")).count()
         labels = new_labels.select("id", "comp")
-        if verbose:
-            print(f"[cc] iter={it} changed={changed}")
         if changed == 0:
             break
     if changed != 0:

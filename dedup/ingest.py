@@ -216,7 +216,6 @@ def to_docs_arrow(
     assume_unique_urls: bool = False,
     keep_text: bool = True,
     carry_tiebreak: bool = False,
-    slim_sigs: bool = False,
 ) -> DataFrame:
     """Arrow-kernel twin of ``to_docs`` — identical rows (parity test in
     tests/test_text.py), built for the pipeline hot path: the derived
@@ -242,20 +241,7 @@ def to_docs_arrow(
     exact latest_by_url tie-break over the resolved row — as a
     passthrough column, so a later ``latest_docs_by_url`` collapse on
     the ingested frame picks the identical winner the probe-first path
-    would have, even though the raw text is gone by then. 8 B/row.
-
-    ``slim_sigs=True`` (fused ingest+signature mode, round-4 lever):
-    also emit the slim signature columns (pre*/band_hashes/simhash/
-    n_shingles, exactly ``signatures.with_slim_signatures``' output,
-    shared kernel ``signatures.slim_sig_arrays``) computed from the
-    normalized bytes ALREADY IN HAND in this kernel — the norm_text
-    column then never round-trips through the spill into a second Arrow
-    crossing for the signature stage. Signatures are computed per
-    ingested row (content-sha representatives are not knowable inside
-    the kernel); the pipeline filters to representatives afterwards, so
-    the extra compute is the exact-duplicate fraction of the corpus —
-    traded against a full text-column spill read + Arrow crossing
-    (measured both ways in BENCH/BASELINE.md)."""
+    would have, even though the raw text is gone by then. 8 B/row."""
     import pyarrow as pa
 
     latest = _resolve_latest(pages, recompute_text, assume_unique_urls)
@@ -271,12 +257,6 @@ def to_docs_arrow(
 
         from dedup.hashing import xxh64_strings
         from dedup.text import normalize_text_py
-
-        if slim_sigs:
-            from dedup.hashing import perm_consts
-            from dedup.signatures import slim_sig_arrays
-
-            consts = perm_consts(cfg.num_perm, cfg.perm_seed)
 
         for rb in batches:
             n = rb.num_rows
@@ -360,10 +340,6 @@ def to_docs_arrow(
                     [None if s is None else len(s) for s in norm_l],
                     type=pa.int64(),
                 )
-                if slim_sigs:
-                    ndata, noff = _str_buffers(
-                        pc.fill_null(norm, "") if norm.null_count else norm
-                    )
             cols = [("url", url), ("doc_id", doc_id), ("warc_ts", rb.column(idx("warc_ts")))]
             if keep_text:
                 cols.append(("text", txt))
@@ -373,30 +349,6 @@ def to_docs_arrow(
                 ("n_chars", n_chars.cast(pa.int64())),
                 ("content_sha", pa.array(shas, type=pa.string())),
             ]
-            if slim_sigs:
-                # normalized bytes are already in hand as (ndata, noff) —
-                # the whole signature stage runs here, no second crossing
-                pre, bh, simh, lengths = slim_sig_arrays(
-                    ndata, noff.astype(np.int64), cfg, consts
-                )
-                nb = bh.shape[1]
-                cols += [
-                    (f"pre{i}", pa.array(np.ascontiguousarray(pre[:, i])))
-                    for i in range(pre.shape[1])
-                ]
-                cols += [
-                    (
-                        "band_hashes",
-                        pa.ListArray.from_arrays(
-                            pa.array(
-                                np.arange(0, (n + 1) * nb, nb, dtype=np.int32)
-                            ),
-                            pa.array(np.ascontiguousarray(bh).reshape(-1)),
-                        ),
-                    ),
-                    ("simhash", pa.array(simh)),
-                    ("n_shingles", pa.array(lengths.astype(np.int32))),
-                ]
             if carry_tiebreak:
                 cols.append(("_tb", rb.column(idx("_tb"))))
             yield pa.RecordBatch.from_arrays(
@@ -405,18 +357,13 @@ def to_docs_arrow(
 
     text_field = "text string, " if keep_text else ""
     tb_field = ", _tb long" if carry_tiebreak else ""
-    sig_fields = ""
-    if slim_sigs:
-        from dedup.signatures import slim_sig_schema_fields
-
-        sig_fields = ", " + ", ".join(slim_sig_schema_fields(cfg))
     in_cols = ["url", "warc_ts", "lang", "text"] + (["_tb"] if carry_tiebreak else [])
     return latest.select(*in_cols).mapInArrow(
         run,
         schema=(
             f"url string, doc_id long, warc_ts timestamp, {text_field}"
             f"norm_text string, lang string, n_chars long, content_sha string"
-            f"{sig_fields}{tb_field}"
+            f"{tb_field}"
         ),
     )
 

@@ -16,25 +16,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dedup.candidates import cap_buckets, simhash_candidates_arrow
 from dedup.components import assign_clusters, connected_components
 from dedup.config import DedupConfig
-from dedup.ingest import exact_edges, representatives, to_docs
+from dedup.ingest import representatives, to_docs
 from dedup.lineage import (
     StageTimer,
     collect_lineage,
     metrics_table,
     partition_lineage,
 )
-from dedup.pipeline import cluster_report
-from dedup.signatures import (
-    range_partition_by_sig_prefix,
-    with_bands,
-    with_slim_signatures,
-)
-from dedup.skew import salted_lsh_candidates
+from dedup.pipeline import cluster_report, edges_from_signatures
+from dedup.signatures import range_partition_by_sig_prefix, with_slim_signatures
 from dedup.tableio import TableIO
-from dedup.verify import est_filter_pairs, verify_jaccard_lazy
+
+# not called here since the edges stage runs pipeline.edges_from_signatures;
+# still imported because perfbench/trace.py wraps it on this module
+from dedup.verify import verify_jaccard_lazy  # noqa: F401
 
 
 def load_pages(spark: SparkSession, path: str, kind: str) -> DataFrame:
@@ -108,11 +105,11 @@ def dedup_stages(
     extra_key: str = "", n_buckets: int = 0,
 ) -> DataFrame:
     """The near-dup stage chain (signatures → edges → clusters →
-    report) over an already-committed-and-persisted docs frame. Returns
-    the clusters frame (doc_id, url, cluster_id). Shared by run_dedup
-    (whole-corpus dedup) and curate_corpus (dedup of gate survivors —
-    whose job passes its gate parameters via ``extra_key`` so a changed
-    gate recomputes every stage whose input set changed).
+    report) over an already-committed docs frame, persisted but not yet
+    filled. Returns the clusters frame (doc_id, url, cluster_id). Shared
+    by run_dedup (whole-corpus dedup) and curate_corpus (dedup of gate
+    survivors — whose job passes its gate parameters via ``extra_key``
+    so a changed gate recomputes every stage whose input set changed).
 
     ``n_buckets`` > 0 commits CLUSTERS bucketed by doc_id (matching the
     docs commit from ``ingest_stage``): every later clusters ⋈ docs
@@ -120,13 +117,16 @@ def dedup_stages(
     downstream curation join — SortMergeJoins with zero Exchange on
     either side, on every resume, in any session."""
     cfg = r.cfg
+    # fills the caller's persist and gives the edge builder's broadcast
+    # gates their doc count
+    n_docs = docs.count()
 
     # committed signature table is the SLIM form (band hashes + byte-packed
     # est prefix + simhash): 2.5× less I/O than full-width minhash, and
     # everything downstream — banding, est prefilter, simhash blocking —
-    # reads only it. Same fused flow as pipeline.build_edges. The kernel
-    # output is persisted under the range partitioner: its bound-sampling
-    # jobs would otherwise each re-run the signature kernel.
+    # reads only it. Same kernel as pipeline.build_edges' spill. The
+    # kernel output is persisted under the range partitioner: its
+    # bound-sampling jobs would otherwise each re-run the signature kernel.
     kernel = with_slim_signatures(representatives(docs, cfg), cfg).persist()
     try:
         sigs = r.stage(
@@ -136,34 +136,15 @@ def dedup_stages(
     finally:
         kernel.unpersist()
 
-    def mk_edges():
-        bands, _hot = cap_buckets(with_bands(sigs, cfg), cfg.bucket_cap)
-        cands = salted_lsh_candidates(bands, cfg, dedupe=False).union(
-            simhash_candidates_arrow(sigs, cfg, dedupe=False)
-        )
-        # est filter fused pre-distinct: the overcomplete flood never
-        # crosses a shuffle; exact shingle Jaccard (recomputed only for
-        # est survivors inside verify_jaccard_lazy) decides every edge
-        cands = est_filter_pairs(cands, sigs, cfg).dropDuplicates(["src", "dst"])
-        near = verify_jaccard_lazy(cands, docs, cfg, signatures=sigs)
-        e = exact_edges(docs).unionByName(near)
-        if use_containment:
-            # E5 at-scale surface (--use-containment): candidates that
-            # FAILED the near-Jaccard verify get the suffix-array
-            # longest-common-substring check → 'substr' edges (same
-            # composition as pipeline.build_edges)
-            from dedup.verify import verify_containment
-
-            sub = verify_containment(
-                cands.join(near.select("src", "dst"), ["src", "dst"], "left_anti"),
-                docs,
-                cfg,
-            )
-            e = e.unionByName(sub)
-        return e.dropDuplicates(["src", "dst"])
-
     ck = ("-containment" if use_containment else "") + extra_key
-    edges = r.stage("edges", mk_edges, sort_within=["src", "dst"], extra_key=ck)
+    # the same edge builder as pipeline.run_dedup, on the committed
+    # signatures snapshot (its exact ∪ near ∪ substr union is
+    # duplicate-free by construction)
+    edges = r.stage(
+        "edges",
+        lambda: edges_from_signatures(docs, sigs, cfg, n_docs, use_containment),
+        sort_within=["src", "dst"], extra_key=ck,
+    )
     kinds = ("exact", "near", "substr") if use_containment else ("exact", "near")
 
     def mk_clusters():
@@ -225,7 +206,6 @@ def run_dedup_job(
     r = Runner(spark, tio, cfg, run_id)
     uk = "-uniq" if assume_unique_urls else ""
     docs = ingest_stage(r, pages, assume_unique_urls, n_buckets=n_buckets).persist()
-    docs.count()
     dedup_stages(
         r, docs, use_containment=use_containment, extra_key=uk,
         n_buckets=n_buckets,

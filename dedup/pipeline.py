@@ -35,13 +35,7 @@ from dedup.candidates import (
 from dedup.skew import salted_lsh_candidates
 from dedup.components import assign_clusters, connected_components
 from dedup.config import DEFAULT_CONFIG, DedupConfig
-from dedup.ingest import (
-    exact_edges,
-    exact_groups,
-    representatives,
-    to_docs,
-    to_docs_arrow,
-)
+from dedup.ingest import exact_edges, representatives, to_docs_arrow
 from dedup.signatures import (
     with_bands,
     with_bands_pre,
@@ -60,6 +54,12 @@ from dedup.verify import (
 #: spill dirs created by this process — removed at interpreter exit so
 #: repeated runs don't fill the (RAM-backed) scratch space
 _SPILL_DIRS: list[str] = []
+#: spill dirs are named ``dedup-spill-<pid>-<name>-*`` so a later process
+#: can tell whose they are: exit hooks never run on SIGKILL, so the
+#: first spill of every process sweeps the dirs of pids no longer alive
+#: (so processes sharing one scratch dir must share a pid namespace)
+_SPILL_PREFIX = "dedup-spill-"
+_SWEPT = False
 
 
 def _cleanup_spills() -> None:
@@ -70,6 +70,47 @@ def _cleanup_spills() -> None:
 
 
 atexit.register(_cleanup_spills)
+
+
+def _pid_alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:  # exists, owned by another user
+        return True
+    return True
+
+
+def _sweep_dead_spills(base: str) -> None:
+    """Remove the spill dirs under ``base`` whose owning pid is gone (a
+    killed run's leak). A live pid's dirs are never touched."""
+    import re
+    import shutil
+
+    for entry in os.listdir(base):
+        m = re.match(rf"{_SPILL_PREFIX}(\d+)-", entry)
+        if m and not _pid_alive(int(m.group(1))):
+            shutil.rmtree(os.path.join(base, entry), ignore_errors=True)
+
+
+def _spill_dir(name: str) -> str:
+    """A fresh spill dir owned by this process; the first call sweeps
+    dead processes' leftovers."""
+    import tempfile
+
+    from dedup.session import scratch_dir
+
+    global _SWEPT
+    base = scratch_dir()
+    os.makedirs(base, exist_ok=True)
+    if not _SWEPT:
+        _sweep_dead_spills(base)
+        _SWEPT = True
+    d = tempfile.mkdtemp(prefix=f"{_SPILL_PREFIX}{os.getpid()}-{name}-", dir=base)
+    _SPILL_DIRS.append(d)
+    return d
+
 
 #: broadcast the rep-id frame (8 B/row) below this many docs — 20M ids
 #: ≈ 160 MB broadcast, comfortably inside executor memory; beyond that
@@ -96,9 +137,9 @@ def job_desc(spark, desc: str):
 #: signature kernel) is stuck with ≤11 tasks whatever the session's
 #: core count — profiled as a 1.4-ragged-wave stage costing ~10 s of
 #: wall at 500k docs. 8192-row files (~5 MB of docs) give every level
-#: even waves. Local-bench knob only: at cluster scale the spill is a
-#: TableIO commit whose bucketed layout fixes file counts explicitly.
-SPILL_MAX_RECORDS_PER_FILE = int(os.environ.get("DEDUP_SPILL_ROWS_PER_FILE", 8192))
+#: even waves. At cluster scale the spill is a TableIO commit whose
+#: bucketed layout fixes file counts explicitly.
+SPILL_MAX_RECORDS_PER_FILE = 8192
 
 
 def _spill(df: DataFrame, name: str) -> DataFrame:
@@ -108,29 +149,18 @@ def _spill(df: DataFrame, name: str) -> DataFrame:
     session.scratch_dir — the sandbox's single shared disk is not the
     at-scale model); at real scale this is a TableIO commit instead
     (jobs/run_dedup.py)."""
-    import tempfile
+    from dedup.session import _is_tmpfs
 
-    from dedup.session import _is_tmpfs, scratch_dir
-
-    base = scratch_dir()
-    os.makedirs(base, exist_ok=True)
-    d = tempfile.mkdtemp(prefix=f"dedup-spill-{name}-", dir=base)
-    _SPILL_DIRS.append(d)
+    d = _spill_dir(name)
     w = df.write.option("maxRecordsPerFile", SPILL_MAX_RECORDS_PER_FILE)
-    # $DEDUP_SPILL_COMPRESSION overrides the tmpfs auto-toggle (A/B
-    # lever: compressing the text-heavy docs spill trades CPU — which
-    # scales with cores — for DRAM read traffic on every downstream
-    # scan, which does not; measured both ways in BENCH/BASELINE.md)
-    comp = os.environ.get("DEDUP_SPILL_COMPRESSION")
-    if comp:
-        w = w.option("compression", comp)
-    elif _is_tmpfs(base):
+    if _is_tmpfs(d):
         # RAM-backed scratch: snappy only burns shared DRAM bandwidth —
         # the spill is re-scanned by several downstream stages and every
         # scan would re-decompress bytes that already live in memory.
         # On a real cluster the spill is a TableIO commit to disk/object
         # storage where compression pays for itself (same rationale as
-        # session.py's shuffle-compression toggle).
+        # session.py's shuffle-compression toggle; both ways measured in
+        # BENCH/BASELINE.md).
         w = w.option("compression", "uncompressed")
     with job_desc(df.sparkSession, f"dedup: spill {name}"):
         w.mode("overwrite").parquet(d)
@@ -159,13 +189,11 @@ class DedupResult:
 def build_edges(
     docs: DataFrame,
     cfg: DedupConfig,
-    use_simhash: bool = True,
     use_containment: bool = False,
     persist: bool = True,
 ):
-    """docs → (edges, signatures, shingles). Candidate generators are
-    unioned pre-verification; 'exact' edges bypass verification (they
-    are definitionally sim=1)."""
+    """docs → (edges, signatures, shingles): representatives, their
+    signatures, then ``edges_from_signatures``."""
     # Hint-broadcast the rep-id frame when the doc count is known small:
     # without the hint the left-semi join map-writes the full docs text
     # column before AQE can demote it (306 MB at 500k docs, ~77 task-s of
@@ -174,53 +202,14 @@ def build_edges(
     # the safe shuffle join stands — at cluster scale the co-location
     # comes from bucketed table layout instead (SURVEY §4.3).
     n_docs = docs.count() if persist else None
-    bcast_ids = persist and n_docs <= BROADCAST_REP_IDS_MAX
-    # the slim signature frame (~136 B/doc) is broadcastable far below
-    # the 8 B/doc id frame's cap — separate threshold (verify.py) plus
-    # a BYTES bound on the candidate-kernel sideband for the widest
-    # layout this run can select (with_bands + full width): a config
-    # that widens the per-doc payload must not ride a doc-count-only
-    # gate into an oversized per-worker broadcast
-    bcast_sigs = (
-        persist
-        and n_docs <= BROADCAST_SIGS_MAX
-        and estimate_sideband_bytes(n_docs, cfg, with_bands=True, full_width=True)
-        <= BROADCAST_SIDEBAND_MAX_BYTES
+    reps = representatives(
+        docs, cfg, broadcast_ids=persist and n_docs <= BROADCAST_REP_IDS_MAX
     )
-    reps = representatives(docs, cfg, broadcast_ids=bcast_ids)
     # fused stage: shingle hashing + minhash + simhash in ONE Arrow
     # crossing (signatures.with_shingle_signatures) — the JVM shingle
     # expression + separate cache + separate UDF measured ~2× this cost
     # and scaled poorly with cores (substring/array_distinct churn)
-    if persist and "band_hashes" in docs.columns:
-        # fused-ingest path (to_docs_arrow(slim_sigs=True)): the
-        # signature columns were computed inside the ingest kernel from
-        # the normalized bytes already in hand — norm_text never
-        # round-trips through the spill into a second Arrow crossing.
-        # Here we only rep-filter (sigs exist per ingested row; only
-        # content-sha representatives may enter candidate generation —
-        # identical signatures on exact dups would otherwise explode
-        # LSH buckets quadratically in group size) and re-spill the
-        # slim frame: a column-pruned scan (never the text) feeding a
-        # ~136 B/doc write, after which every downstream consumer —
-        # native sideband build included — sees the identical sigsh
-        # spill layout as the staged path.
-        sig_cols = [
-            c
-            for c in docs.columns
-            if c.startswith("pre")
-            or c in ("band_hashes", "simhash", "n_shingles")
-        ]
-        ids = exact_groups(docs).select(F.col("canon_id").alias("doc_id"))
-        if bcast_ids:
-            ids = F.broadcast(ids)
-        sig_sh = _spill(
-            docs.join(ids, "doc_id", "left_semi")
-            .filter(F.col("n_chars") >= cfg.min_text_len)
-            .select("doc_id", *sig_cols),
-            "sigsh",
-        )
-    elif persist:
+    if persist:
         # fused slim signature stage (see signatures.with_slim_signatures):
         # band keys + est-prefilter minhash prefix + simhash in ONE Arrow
         # crossing, then one parquet round-trip materializes it for the
@@ -232,12 +221,94 @@ def build_edges(
         # leaves the Python worker — pairs are decided by exact shingle
         # Jaccard, so the suffix is dead weight; committed signature I/O
         # shrinks ~2.5× and the pair-join shuffle ~4×.
-        sig_sh = _spill(with_slim_signatures(reps, cfg), "sigsh")
+        sigs = _spill(with_slim_signatures(reps, cfg), "sigsh")
     else:
-        sig_sh = with_shingle_signatures(reps, cfg)
-    sigs = sig_sh
+        sigs = with_shingle_signatures(reps, cfg)
+    edges = edges_from_signatures(docs, sigs, cfg, n_docs, use_containment)
+    # lazy shingles frame, API compat for callers that want it
+    return edges, sigs, with_shingles_np(reps, cfg)
+
+
+def edges_from_signatures(
+    docs: DataFrame,
+    sigs: DataFrame,
+    cfg: DedupConfig,
+    n_docs: int | None,
+    use_containment: bool = False,
+) -> DataFrame:
+    """docs + their representatives' signatures → edges (exact ∪ near
+    [∪ substr]). The one edge builder of both entry points: run_dedup
+    passes its signature spill, the spark-submit job
+    (jobrunner.dedup_stages) its committed signatures snapshot.
+    ``n_docs`` (the docs count, None when unknown) feeds the broadcast
+    gates of ``candidates_from_signatures``."""
+    # the slim signature frame (~136 B/doc) is broadcastable far below
+    # the 8 B/doc id frame's cap — separate threshold (verify.py) plus
+    # a BYTES bound on the candidate-kernel sideband: a config that
+    # widens the per-doc payload must not ride a doc-count-only gate
+    # into an oversized per-worker broadcast
+    bcast_sigs = (
+        n_docs is not None
+        and n_docs <= BROADCAST_SIGS_MAX
+        and estimate_sideband_bytes(n_docs, cfg) <= BROADCAST_SIDEBAND_MAX_BYTES
+    )
+    cands, pre_refined = candidates_from_signatures(sigs, cfg, bcast_sigs)
+    # exact verification recomputes shingles only for est-passing docs
+    # (with_shingles_np) — the full shingle table is never materialized
+    near = verify_jaccard_lazy(
+        cands,
+        docs,
+        cfg,
+        signatures=sigs,
+        broadcast_sigs=bcast_sigs,
+        pre_refined=pre_refined,
+    )
+    # the union is duplicate-free by construction, no pair-distinct
+    # shuffle needed: `near` derives 1:1 from the already-distinct
+    # candidate pairs, whose endpoints are content-sha representatives
+    # (one per sha, the group min); `exact` edges point canon → non-rep
+    # member within one sha group, so no exact edge can coincide with a
+    # rep↔rep pair; `substr` edges are anti-joined against `near` and
+    # come from the same distinct candidate set.
+    e = exact_edges(docs).unionByName(near)
+    if use_containment:
+        # E5: candidates that FAILED the near-Jaccard verify get the
+        # suffix-array longest-common-substring check → 'substr' edges
+        sub = verify_containment(
+            cands.join(near.select("src", "dst"), ["src", "dst"], "left_anti"),
+            docs,
+            cfg,
+        )
+        e = e.unionByName(sub)
+    return e
+
+
+def candidates_from_signatures(
+    sigs: DataFrame, cfg: DedupConfig, bcast_sigs: bool
+) -> tuple[DataFrame, bool]:
+    """Signatures → distinct candidate pairs (src, dst, est_jacc) past
+    the stage-1 estimate filter, and whether the stage-2 refine already
+    ran in-kernel. Full-width (non-slim) signatures yield (src, dst)
+    and leave the estimate to the verifier.
+
+    One candidate tier per data-size regime, picked by one gate:
+
+    - **broadcast** (``fused_candidates_bcast``): slim signatures, no
+      salting, and ``bcast_sigs`` (the doc count within
+      ``BROADCAST_SIGS_MAX`` and the sideband within
+      ``BROADCAST_SIDEBAND_MAX_BYTES``);
+    - **Arrow shuffle** (``lsh_candidates_arrow`` +
+      ``simhash_candidates_arrow``): slim signatures, no salting, above
+      the gate — no driver collect;
+    - **salted JVM join** (``skew.salted_lsh_candidates``):
+      ``cfg.salt_hot_thresh`` > 0, or full-width (non-slim) signatures.
+
+    Every tier yields the same pairs and estimates
+    (tests/test_edge_tiers.py). Kernels are looked up as this module's
+    globals, so instrumentation that wraps them here covers both entry
+    points."""
     slim = all(c in sigs.columns for c in ("pre0", "pre1", "pre2", "pre3"))
-    pre_refined = False  # set by the bcast branch when refine ran in-kernel
+    pre_refined = False
     if slim and cfg.salt_hot_thresh <= 0 and bcast_sigs:
         # Exchange-free broadcast candidate kernel
         # (candidates.fused_candidates_bcast): ALL per-doc metadata —
@@ -248,30 +319,21 @@ def build_edges(
         # exchange (row serialization + partition-id sort + ~330 MB
         # write+read at 500k docs) and the per-row Arrow crossing
         # disappear entirely — exchange cost was the worst 8→32-core
-        # task-time inflater. Same (pair, est) output as the
-        # shuffle-path kernels below (parity-tested); the bucket cap
-        # folds in-kernel (no extra stats pass).
+        # task-time inflater. The bucket cap folds in-kernel (no extra
+        # stats pass).
         lookup = sig_lookup_arrays(
-            sigs,
-            with_bands=True,
-            parquet_dir=getattr(sigs, "_dedup_spill_dir", None),
-            cfg=cfg,  # enables the presorted-slice kernel layout
-            # the fused kernel indexes rows positionally (never binary-
-            # searches ids) — file order skips the id argsort + five
-            # row-gathers on the executor-idle critical path
-            sorted_ids=False,
+            sigs, cfg, parquet_dir=getattr(sigs, "_dedup_spill_dir", None)
         )
         # full-width packed bytes available → the kernel also runs the
         # stage-2 refine (verify.refine_est_pairs twin) in place, so
         # the JVM only ever sees final refined pairs
         pre_refined = "pre_full" in lookup
-        lookup_bc = docs.sparkSession.sparkContext.broadcast(lookup)
+        spark = sigs.sparkSession
         cands = fused_candidates_bcast(
-            docs.sparkSession,
-            lookup_bc,
+            spark,
+            spark.sparkContext.broadcast(lookup),
             cfg,
             cap=cfg.bucket_cap,
-            use_simhash=use_simhash,
             full_est=pre_refined,
         )
     elif slim and cfg.salt_hot_thresh <= 0:
@@ -286,13 +348,11 @@ def build_edges(
         # the at-scale path (no driver collect): above the broadcast
         # gate the metadata travels through the exchange with the rows.
         bands, _hot = cap_buckets(with_bands_pre(sigs, cfg), cfg.bucket_cap)
-        cands = lsh_candidates_arrow(bands, cfg)
-        if use_simhash:
-            cands = cands.union(
-                est_filter_pairs(
-                    simhash_candidates_arrow(sigs, cfg, dedupe=False), sigs, cfg
-                )
+        cands = lsh_candidates_arrow(bands, cfg).union(
+            est_filter_pairs(
+                simhash_candidates_arrow(sigs, cfg, dedupe=False), sigs, cfg
             )
+        )
     else:
         # salted path when cfg.salt_hot_thresh > 0, plain equi-join
         # otherwise. Raw (non-distinct) floods from both generators: the
@@ -300,62 +360,24 @@ def build_edges(
         # verify.est_filter_pairs) and the pair-distinct shuffle happens
         # on its survivors only.
         bands, _hot = cap_buckets(with_bands(sigs, cfg), cfg.bucket_cap)
-        cands = salted_lsh_candidates(bands, cfg, dedupe=False)
-        if use_simhash:
-            cands = cands.union(simhash_candidates_arrow(sigs, cfg, dedupe=False))
+        cands = salted_lsh_candidates(bands, cfg, dedupe=False).union(
+            simhash_candidates_arrow(sigs, cfg, dedupe=False)
+        )
         if slim:
             cands = est_filter_pairs(cands, sigs, cfg)
-    cands = cands.dropDuplicates(["src", "dst"])
-
-    # exact verification recomputes shingles only for est-passing docs
-    # (with_shingles_np) — the full shingle table is never materialized
-    near = verify_jaccard_lazy(
-        cands,
-        docs,
-        cfg,
-        signatures=sigs,
-        broadcast_sigs=bcast_sigs,
-        pre_refined=pre_refined,
-    )
-    # lazy shingles frame, API compat for callers that want it
-    shingles = with_shingles_np(reps, cfg)
-    # the union is duplicate-free by construction, no pair-distinct
-    # shuffle needed: `near` derives 1:1 from the already-distinct
-    # candidate pairs, whose endpoints are content-sha representatives
-    # (one per sha, the group min); `exact` edges point canon → non-rep
-    # member within one sha group, so no exact edge can coincide with a
-    # rep↔rep pair; `substr` edges are anti-joined against `near` and
-    # come from the same distinct candidate set.
-    e = exact_edges(docs).unionByName(near)
-    if use_containment:
-        sub = verify_containment(
-            cands.join(near.select("src", "dst"), ["src", "dst"], "left_anti"),
-            docs,
-            cfg,
-        )
-        e = e.unionByName(sub)
-    return e, sigs, shingles
+    return cands.dropDuplicates(["src", "dst"]), pre_refined
 
 
 def run_dedup(
     pages: DataFrame,
     cfg: DedupConfig = DEFAULT_CONFIG,
     recompute_text: bool = False,
-    use_simhash: bool = True,
     use_containment: bool = False,
     edge_kinds: tuple[str, ...] = ("exact", "near"),
-    fuse_ingest_sigs: bool | None = None,
 ) -> DedupResult:
     """Full pipeline: pages → clusters. ``edge_kinds`` selects which edge
     kinds participate in clustering (pinned default: exact + verified
-    Jaccard — the oracle in tests mirrors exactly this rule).
-
-    ``fuse_ingest_sigs`` (None = $DEDUP_FUSE_INGEST_SIGS, default off):
-    trusted-text speculative path only — compute the slim signature
-    columns inside the ingest kernel (one Arrow crossing for
-    normalization AND signatures; the norm_text column never re-crosses
-    from the spill) at the cost of signing exact-duplicate captures too.
-    Output-identical either way (parity test); A/B in BENCH/BASELINE.md."""
+    Jaccard — the oracle in tests mirrors exactly this rule)."""
     # Runtime-adaptive latest-capture pick: one pruned scan of the url
     # column (count vs distinct-count — map-side partial agg, ~30 MB of
     # strings at 500k docs) decides whether any url has multiple
@@ -381,9 +403,6 @@ def run_dedup(
     # provably skips.
     spark = pages.sparkSession
     speculate = not recompute_text
-    if fuse_ingest_sigs is None:
-        fuse_ingest_sigs = os.environ.get("DEDUP_FUSE_INGEST_SIGS", "0") == "1"
-    fuse_ingest_sigs = fuse_ingest_sigs and speculate
     probe_out: dict = {}
 
     def _probe() -> None:
@@ -429,7 +448,6 @@ def run_dedup(
                 assume_unique_urls=True,
                 keep_text=False,
                 carry_tiebreak=True,
-                slim_sigs=fuse_ingest_sigs,
             ),
             "docs",
         )
@@ -474,22 +492,7 @@ def run_dedup(
             ),
             "docs",
         )
-    edges, sigs, _sh = build_edges(
-        docs, cfg, use_simhash=use_simhash, use_containment=use_containment
-    )
-    if fuse_ingest_sigs and "band_hashes" in docs.columns:
-        # API/output parity with the staged path: the fused sig columns
-        # are build_edges internals — the returned docs/clusters frames
-        # carry the standard docs schema either way (lazy projection
-        # over the spill; the edge DAG above keeps its own reference)
-        docs = docs.drop(
-            *[
-                c
-                for c in docs.columns
-                if c.startswith("pre")
-                or c in ("band_hashes", "simhash", "n_shingles")
-            ]
-        )
+    edges, sigs, _sh = build_edges(docs, cfg, use_containment=use_containment)
     edges = edges.persist(StorageLevel.MEMORY_AND_DISK_DESER)
     with job_desc(pages.sparkSession, "dedup: verify edges + cc"):
         comp = connected_components(

@@ -47,11 +47,8 @@ def slim_sig_arrays(data, offsets, cfg: DedupConfig, consts):
     """(utf8 byte buffer, absolute int64 offsets) of n normalized texts →
     the slim signature numpy columns: ``pre`` (n, n_longs) int64
     byte-packed MinHash low bytes, ``band_hashes`` (n, bands) int64,
-    ``simhash`` (n,) int64, ``n_shingles`` (n,) lengths. ONE shared
-    implementation consumed by both ``with_slim_signatures`` (the staged
-    signature kernel) and the fused ingest kernel
-    (``ingest.to_docs_arrow(slim_sigs_cfg=...)``), so the two paths are
-    bit-identical by construction (parity test in tests/test_text.py)."""
+    ``simhash`` (n,) int64, ``n_shingles`` (n,) lengths — the per-batch
+    core of ``with_slim_signatures``."""
     from dedup.hashing import band_hashes_batch, hash_char_kgrams
 
     flat_u64, lengths = hash_char_kgrams(data, offsets, cfg.k)
@@ -65,16 +62,6 @@ def slim_sig_arrays(data, offsets, cfg: DedupConfig, consts):
     packed[:, : cfg.num_perm] = (mh & np.uint64(0xFF)).astype(np.uint8)
     pre = packed.view("<u8").view(np.int64)  # (n, n_longs)
     return pre, bh, simh, lengths
-
-
-def slim_sig_schema_fields(cfg: DedupConfig) -> list[str]:
-    """DDL fields of the slim signature columns, in spill column order."""
-    n_longs = max(4, -(-cfg.num_perm // 8))
-    return [f"pre{i} long" for i in range(n_longs)] + [
-        "band_hashes array<long>",
-        "simhash long",
-        "n_shingles int",
-    ]
 
 
 def shingles_expr(text_col: str, k: int) -> F.Column:

@@ -353,59 +353,6 @@ def _exact_jaccard_text_arrow(withtext: DataFrame, cfg: DedupConfig) -> DataFram
     )
 
 
-def _exact_jaccard_arrow(withsh: DataFrame) -> DataFrame:
-    """(src, dst, est_jacc, sh_a, sh_b) → + sim: exact Jaccard of the
-    distinct sorted shingle-hash arrays, vectorized searchsorted
-    intersection per pair (bit-identical to ``array_intersect``-based
-    SQL — both count equal int64 hashes). Runs only on est-filter
-    survivors, a small fraction of candidates."""
-    import pyarrow as pa
-
-    def run(batches):
-        for rb in batches:
-            n = rb.num_rows
-            if n == 0:
-                continue
-
-            def segs(name):
-                col = rb.column(rb.schema.get_field_index(name))
-                off = col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-                # hashes are ascending per doc in UNSIGNED order
-                # (hashing.hash_char_kgrams); the int64 view is not
-                # monotone, so searchsorted must see uint64
-                vals = col.values.to_numpy(zero_copy_only=False).view(np.uint64)
-                return vals, off
-
-            va, oa = segs("sh_a")
-            vb, ob = segs("sh_b")
-            sim = np.empty(n, dtype=np.float64)
-            for i in range(n):
-                a = va[oa[i] : oa[i + 1]]
-                b = vb[ob[i] : ob[i + 1]]
-                if len(a) > len(b):
-                    a, b = b, a
-                if len(a) == 0:
-                    sim[i] = 1.0 if len(b) == 0 else 0.0
-                    continue
-                idx = np.searchsorted(b, a)
-                idx[idx == len(b)] = len(b) - 1
-                inter = int((b[idx] == a).sum())
-                sim[i] = inter / float(len(a) + len(b) - inter)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    rb.column(rb.schema.get_field_index("src")),
-                    rb.column(rb.schema.get_field_index("dst")),
-                    rb.column(rb.schema.get_field_index("est_jacc")),
-                    pa.array(sim),
-                ],
-                names=["src", "dst", "est_jacc", "sim"],
-            )
-
-    return withsh.select("src", "dst", "est_jacc", "sh_a", "sh_b").mapInArrow(
-        run, schema="src long, dst long, est_jacc double, sim double"
-    )
-
-
 _PRE_COLS = ["pre0", "pre1", "pre2", "pre3"]
 
 #: below this many est-surviving pairs, the text-attach joins run

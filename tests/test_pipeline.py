@@ -221,38 +221,6 @@ def test_multi_capture_urls_take_latest(spark, tiny_pages_df):
     assert got.docs.count() == tiny_pages_df.count()
 
 
-def test_fused_ingest_sigs_pipeline_parity(spark, tiny_pages_df):
-    """Round-4 fusion lever, end-to-end: run_dedup with
-    fuse_ingest_sigs=True must produce identical edges (src, dst, kind),
-    identical clusters, and the standard docs schema — on a unique-url
-    corpus AND on a multi-capture corpus (the post-spill collapse rides
-    the fused columns through latest_docs_by_url)."""
-    from pyspark.sql import types as T
-
-    def keys(res):
-        return (
-            {(r.src, r.dst, r.kind) for r in res.edges.select("src", "dst", "kind").collect()},
-            {(r.url, r.cluster_id) for r in res.clusters.select("url", "cluster_id").collect()},
-        )
-
-    base = run_dedup(tiny_pages_df, DEFAULT_CONFIG, fuse_ingest_sigs=False)
-    fused = run_dedup(tiny_pages_df, DEFAULT_CONFIG, fuse_ingest_sigs=True)
-    assert keys(fused) == keys(base)
-    assert sorted(fused.docs.columns) == sorted(base.docs.columns)
-    assert not any(c.startswith("pre") for c in fused.clusters.columns)
-
-    stale = tiny_pages_df.limit(40).select(
-        "url",
-        (F.col("warc_ts") - F.expr("interval 7 days")).alias("warc_ts"),
-        F.lit(None).cast(T.BinaryType()).alias("html"),
-        F.concat(F.lit("STALE JUNK "), F.col("text")).alias("text"),
-        "lang",
-    )
-    noisy = tiny_pages_df.unionByName(stale)
-    noisy_fused = run_dedup(noisy, DEFAULT_CONFIG, fuse_ingest_sigs=True)
-    assert keys(noisy_fused) == keys(base)
-
-
 def test_containment_end_to_end(spark, tiny_pages_df, tiny_pages):
     """E5 in the full pipeline (round-1 verdict item 6): with
     use_containment=True, candidate pairs that FAIL the near-Jaccard
@@ -298,3 +266,40 @@ def test_containment_end_to_end(spark, tiny_pages_df, tiny_pages):
     n_contain = int((truth["kind"] == "contain").sum())
     assert n_contain > 0
     assert co_clustered(res) >= co_clustered(base)
+
+
+def test_spill_sweep_removes_only_dead_process_dirs(tmp_path, monkeypatch):
+    """A run killed with SIGKILL never reaches its exit hook, so its
+    spill dir leaks. The first spill of the next process removes it,
+    and keeps every dir of a live process (here: this one)."""
+    import os
+    import signal
+    import subprocess
+    import sys
+
+    from dedup import pipeline
+
+    monkeypatch.setenv("DEDUP_SCRATCH", str(tmp_path))
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    child = subprocess.Popen(
+        [
+            sys.executable, "-c",
+            "import time; from dedup import pipeline; "
+            "print(pipeline._spill_dir('killed'), flush=True); time.sleep(600)",
+        ],
+        cwd=repo, stdout=subprocess.PIPE, text=True,
+    )
+    try:
+        dead = child.stdout.readline().strip()
+    finally:
+        child.send_signal(signal.SIGKILL)
+        child.wait()
+    assert dead and os.path.isdir(dead), "the child made no spill dir"
+
+    mine = tmp_path / f"dedup-spill-{os.getpid()}-earlier-x"
+    mine.mkdir()
+    monkeypatch.setattr(pipeline, "_SWEPT", False)  # as in a fresh process
+    new = pipeline._spill_dir("live")
+    assert not os.path.exists(dead)
+    assert mine.is_dir() and os.path.isdir(new)
+    assert os.path.basename(new).startswith(f"dedup-spill-{os.getpid()}-live-")

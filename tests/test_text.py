@@ -177,51 +177,6 @@ def test_speculative_ingest_collapse_matches_probe_first(spark, tiny_pages_df):
     assert len(got) == 60
 
 
-def test_fused_ingest_sigs_match_staged_kernel(spark, tiny_pages_df):
-    """Round-4 fusion lever: to_docs_arrow(slim_sigs=True) must emit
-    signature columns BIT-IDENTICAL to the staged
-    signatures.with_slim_signatures over the same normalized text —
-    per row, including the non-ASCII Python-twin branch and null/empty
-    texts (both paths share signatures.slim_sig_arrays; this pins the
-    buffer plumbing around it)."""
-    from pyspark.sql import functions as F
-
-    from dedup.config import DEFAULT_CONFIG as cfg
-    from dedup.ingest import to_docs_arrow
-    from dedup.signatures import with_slim_signatures
-
-    weird = spark.createDataFrame(
-        [
-            ("u://a", None, None, "  MiXeD \t Case\n\n text body here  ", "en"),
-            ("u://b", None, None, None, "en"),
-            ("u://c", None, None, "ünïcödé  \t ÉDGE ÇASE », Σ末尾 body", "de"),
-            ("u://d", None, None, "", "en"),
-        ],
-        "url string, warc_ts timestamp, html binary, text string, lang string",
-    )
-    pages = tiny_pages_df.limit(80).unionByName(weird)
-    fused = to_docs_arrow(pages, cfg, keep_text=False, slim_sigs=True)
-    sig_cols = [c for c in fused.columns if c.startswith("pre")] + [
-        "band_hashes", "simhash", "n_shingles",
-    ]
-    got = {
-        r.doc_id: tuple(
-            tuple(v) if isinstance(v, list) else v for v in [r[c] for c in sig_cols]
-        )
-        for r in fused.select("doc_id", *sig_cols).collect()
-    }
-    staged = with_slim_signatures(
-        fused.select("doc_id", "norm_text"), cfg
-    )
-    want = {
-        r.doc_id: tuple(
-            tuple(v) if isinstance(v, list) else v for v in [r[c] for c in sig_cols]
-        )
-        for r in staged.select("doc_id", *sig_cols).collect()
-    }
-    assert got == want and len(got) == 84
-
-
 def test_to_docs_arrow_clean_fast_path_parity(spark):
     """All-clean ASCII batches take the identity-normalization fast path
     (no RE2 pass); rows must still equal the JVM twin exactly."""

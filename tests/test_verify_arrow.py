@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 
 from dedup.verify import (
     _est_agreement_arrow,
-    _exact_jaccard_arrow,
     est_jaccard_expr,
     exact_jaccard_expr,
 )
@@ -129,38 +128,6 @@ def test_popcount64_matches_python():
         assert g == bin(int(x)).count("1")
 
 
-def test_simhash_candidates_arrow_matches_sql(spark):
-    """The numpy run-scan kernel emits EXACTLY the pair set of the SQL
-    chunk equi-join, on signatures with heavy chunk-bucket skew (many
-    docs sharing chunk values — the correlated-simhash case the kernel
-    exists for)."""
-    import random
-
-    from dedup.candidates import simhash_candidates, simhash_candidates_arrow
-    from dedup.config import DEFAULT_CONFIG as cfg
-
-    rng = random.Random(13)
-    base = [rng.randrange(0, 2**64) for _ in range(8)]
-    rows = []
-    for i in range(600):
-        # cluster simhashes around 8 bases with 0-6 bit flips: lots of
-        # equal chunks, a mix of hamming<=3 and >3 pairs
-        s = base[rng.randrange(8)]
-        for _ in range(rng.randint(0, 6)):
-            s ^= 1 << rng.randrange(64)
-        sim = s - 2**64 if s >= 2**63 else s
-        rows.append((i, sim, rng.randint(50, 400)))
-    sigs = spark.createDataFrame(rows, "doc_id long, simhash long, n_shingles long")
-    want = {
-        (r.src, r.dst) for r in simhash_candidates(sigs, cfg).collect()
-    }
-    got = {
-        (r.src, r.dst) for r in simhash_candidates_arrow(sigs, cfg).collect()
-    }
-    assert want, "degenerate fixture: SQL path found no pairs"
-    assert got == want
-
-
 def test_est_filter_pairs_matches_late_filter(spark, tiny_pages_df):
     """Fused pre-distinct est filtering (est_filter_pairs on the raw
     flood) keeps exactly the pairs the post-distinct filter kept."""
@@ -189,36 +156,6 @@ def test_est_filter_pairs_matches_late_filter(spark, tiny_pages_df):
     assert fused, "degenerate fixture: no est-passing pairs"
 
 
-def test_lsh_candidates_arrow_matches_sql(spark, tiny_pages_df):
-    """Fused numpy bucket-scan LSH pairing (+ inline stage-1 est filter)
-    == SQL self-join + est_filter_pairs, pair-and-est identical after
-    pair-distinct (the kernel emits per-band duplicates by design)."""
-    from dedup.config import DEFAULT_CONFIG as cfg
-    from dedup.ingest import representatives, to_docs
-    from dedup.signatures import with_bands, with_bands_pre, with_slim_signatures
-    from dedup.candidates import lsh_candidates, lsh_candidates_arrow
-    from dedup.verify import est_filter_pairs
-
-    docs = to_docs(tiny_pages_df, cfg)
-    sigs = with_slim_signatures(representatives(docs, cfg), cfg)
-    got = {
-        (r.src, r.dst, round(r.est_jacc, 9))
-        for r in lsh_candidates_arrow(with_bands_pre(sigs, cfg), cfg)
-        .dropDuplicates(["src", "dst"])
-        .collect()
-    }
-    want = {
-        (r.src, r.dst, round(r.est_jacc, 9))
-        for r in est_filter_pairs(
-            lsh_candidates(with_bands(sigs, cfg), cfg, dedupe=False), sigs, cfg
-        )
-        .dropDuplicates(["src", "dst"])
-        .collect()
-    }
-    assert got == want
-    assert got, "degenerate fixture: no est-passing LSH candidates"
-
-
 def test_slim_signatures_match_full_stage(spark, tiny_pages_df):
     from dedup.config import DEFAULT_CONFIG as cfg
     from dedup.ingest import representatives, to_docs
@@ -234,22 +171,6 @@ def test_slim_signatures_match_full_stage(spark, tiny_pages_df):
     a = {tuple(r) for r in full.collect()}
     b = {tuple(r) for r in slim.collect()}
     assert a == b
-
-
-def test_exact_jaccard_arrow_matches_sql_expr(pair_frames):
-    got = {
-        (r.src, r.dst): r.sim for r in _exact_jaccard_arrow(pair_frames).collect()
-    }
-    want = {
-        (r.src, r.dst): r.sim
-        for r in pair_frames.select(
-            "src", "dst", exact_jaccard_expr().alias("sim")
-        ).collect()
-    }
-    assert got == want
-    # est_jacc column passes through unchanged
-    ests = {r.est_jacc for r in _exact_jaccard_arrow(pair_frames).collect()}
-    assert ests == {0.5}
 
 
 def test_exact_jaccard_text_arrow_matches_shingle_sql(spark):
@@ -337,287 +258,3 @@ def test_refine_est_pairs_recall_safe(spark, tiny_pages_df):
     missed = true_pairs - set(refined)
     assert not missed, f"stage-2 refinement dropped true pairs: {sorted(missed)[:5]}"
     assert all(0.0 <= e <= 1.0 for e in refined.values())
-
-
-def test_lsh_candidates_lookup_matches_arrow(spark, tiny_pages_df):
-    """Broadcast-sideband LSH kernel (16 B/row exchange + numpy lookup)
-    == shuffle-path arrow kernel, pair-and-est identical."""
-    from dedup.config import DEFAULT_CONFIG as cfg
-    from dedup.ingest import representatives, to_docs
-    from dedup.signatures import with_bands_pre, with_slim_signatures
-    from dedup.candidates import (
-        lsh_candidates_arrow,
-        lsh_candidates_lookup,
-        sig_lookup_arrays,
-    )
-
-    docs = to_docs(tiny_pages_df, cfg)
-    sigs = with_slim_signatures(representatives(docs, cfg), cfg)
-    bc = spark.sparkContext.broadcast(sig_lookup_arrays(sigs))
-    got = {
-        (r.src, r.dst, round(r.est_jacc, 9))
-        for r in lsh_candidates_lookup(sigs, bc, cfg)
-        .dropDuplicates(["src", "dst"])
-        .collect()
-    }
-    want = {
-        (r.src, r.dst, round(r.est_jacc, 9))
-        for r in lsh_candidates_arrow(with_bands_pre(sigs, cfg), cfg)
-        .dropDuplicates(["src", "dst"])
-        .collect()
-    }
-    assert got == want
-    assert got, "degenerate fixture: no est-passing LSH candidates"
-
-
-def test_lsh_candidates_lookup_cap_matches_cap_buckets(spark, tiny_pages_df):
-    """In-kernel bucket cap == cap_buckets pre-filter + shuffle kernel."""
-    from dedup.config import DEFAULT_CONFIG
-    from dedup.ingest import representatives, to_docs
-    from dedup.signatures import with_bands_pre, with_slim_signatures
-    from dedup.candidates import (
-        cap_buckets,
-        lsh_candidates_arrow,
-        lsh_candidates_lookup,
-        sig_lookup_arrays,
-    )
-
-    cfg = DEFAULT_CONFIG.with_(bucket_cap=3)
-    docs = to_docs(tiny_pages_df, cfg)
-    sigs = with_slim_signatures(representatives(docs, cfg), cfg)
-    bc = spark.sparkContext.broadcast(sig_lookup_arrays(sigs))
-    got = {
-        (r.src, r.dst)
-        for r in lsh_candidates_lookup(sigs, bc, cfg, cap=cfg.bucket_cap)
-        .dropDuplicates(["src", "dst"])
-        .collect()
-    }
-    bands, _hot = cap_buckets(with_bands_pre(sigs, cfg), cfg.bucket_cap)
-    want = {
-        (r.src, r.dst)
-        for r in lsh_candidates_arrow(bands, cfg)
-        .dropDuplicates(["src", "dst"])
-        .collect()
-    }
-    assert got == want
-
-
-def test_simhash_candidates_lookup_matches_est_filtered(spark, tiny_pages_df):
-    """Broadcast-sideband simhash kernel (fused stage-1 est filter) ==
-    est_filter_pairs over the shuffle-path simhash kernel."""
-    from dedup.config import DEFAULT_CONFIG as cfg
-    from dedup.ingest import representatives, to_docs
-    from dedup.signatures import with_slim_signatures
-    from dedup.candidates import (
-        sig_lookup_arrays,
-        simhash_candidates_arrow,
-        simhash_candidates_lookup,
-    )
-    from dedup.verify import est_filter_pairs
-
-    docs = to_docs(tiny_pages_df, cfg)
-    sigs = with_slim_signatures(representatives(docs, cfg), cfg)
-    bc = spark.sparkContext.broadcast(sig_lookup_arrays(sigs))
-    got = {
-        (r.src, r.dst, round(r.est_jacc, 9))
-        for r in simhash_candidates_lookup(sigs, bc, cfg)
-        .dropDuplicates(["src", "dst"])
-        .collect()
-    }
-    want = {
-        (r.src, r.dst, round(r.est_jacc, 9))
-        for r in est_filter_pairs(
-            simhash_candidates_arrow(sigs, cfg, dedupe=False), sigs, cfg
-        )
-        .dropDuplicates(["src", "dst"])
-        .collect()
-    }
-    assert got == want
-
-
-def test_fused_candidates_lookup_matches_union(spark, tiny_pages_df):
-    """Single tagged-exchange kernel == union of the per-generator
-    lookup kernels, pair-and-est identical (incl. an LSH bucket cap)."""
-    from dedup.config import DEFAULT_CONFIG
-    from dedup.ingest import representatives, to_docs
-    from dedup.signatures import with_slim_signatures
-    from dedup.candidates import (
-        fused_candidates_lookup,
-        lsh_candidates_lookup,
-        sig_lookup_arrays,
-        simhash_candidates_lookup,
-    )
-
-    for cap in (0, 3):
-        cfg = DEFAULT_CONFIG.with_(bucket_cap=cap)
-        docs = to_docs(tiny_pages_df, cfg)
-        sigs = with_slim_signatures(representatives(docs, cfg), cfg)
-        bc = spark.sparkContext.broadcast(sig_lookup_arrays(sigs))
-        got = {
-            (r.src, r.dst, round(r.est_jacc, 9))
-            for r in fused_candidates_lookup(sigs, bc, cfg, cap=cap)
-            .dropDuplicates(["src", "dst"])
-            .collect()
-        }
-        want = {
-            (r.src, r.dst, round(r.est_jacc, 9))
-            for r in lsh_candidates_lookup(sigs, bc, cfg, cap=cap)
-            .union(simhash_candidates_lookup(sigs, bc, cfg))
-            .dropDuplicates(["src", "dst"])
-            .collect()
-        }
-        assert got == want
-        assert got, "degenerate fixture: no candidates"
-
-
-def test_fused_candidates_bcast_matches_lookup(spark, tiny_pages_df):
-    """Exchange-free broadcast kernel == tagged-exchange lookup kernel,
-    pair-and-est identical (incl. an LSH bucket cap and lsh-only mode)."""
-    from dedup.config import DEFAULT_CONFIG
-    from dedup.ingest import representatives, to_docs
-    from dedup.signatures import with_slim_signatures
-    from dedup.candidates import (
-        fused_candidates_bcast,
-        fused_candidates_lookup,
-        lsh_candidates_lookup,
-        sig_lookup_arrays,
-    )
-
-    for cap in (0, 3):
-        cfg = DEFAULT_CONFIG.with_(bucket_cap=cap)
-        docs = to_docs(tiny_pages_df, cfg)
-        sigs = with_slim_signatures(representatives(docs, cfg), cfg)
-        bc = spark.sparkContext.broadcast(sig_lookup_arrays(sigs, with_bands=True))
-
-        def pairset(df):
-            return {
-                (r.src, r.dst, round(r.est_jacc, 9))
-                for r in df.dropDuplicates(["src", "dst"]).collect()
-            }
-
-        got = pairset(fused_candidates_bcast(spark, bc, cfg, cap=cap, n_parts=5))
-        want = pairset(fused_candidates_lookup(sigs, bc, cfg, cap=cap))
-        assert got == want
-        assert got, "degenerate fixture: no candidates"
-        # lsh-only mode == the lsh lookup kernel
-        got_lsh = pairset(
-            fused_candidates_bcast(
-                spark, bc, cfg, cap=cap, n_parts=3, use_simhash=False
-            )
-        )
-        want_lsh = pairset(lsh_candidates_lookup(sigs, bc, cfg, cap=cap))
-        assert got_lsh == want_lsh
-
-
-def test_fused_candidates_bcast_full_est_matches_refine(spark, tiny_pages_df):
-    """full_est mode == exchange-kernel survivors run through the JVM
-    stage-2 refine (verify.refine_est_pairs): same pairs, same
-    full-width estimates."""
-    from dedup.config import DEFAULT_CONFIG as cfg
-    from dedup.ingest import representatives, to_docs
-    from dedup.signatures import with_slim_signatures
-    from dedup.candidates import (
-        fused_candidates_bcast,
-        fused_candidates_lookup,
-        sig_lookup_arrays,
-    )
-    from dedup.verify import refine_est_pairs
-
-    docs = to_docs(tiny_pages_df, cfg)
-    sigs = with_slim_signatures(representatives(docs, cfg), cfg)
-    lk = sig_lookup_arrays(sigs, with_bands=True)
-    assert "pre_full" in lk
-    bc = spark.sparkContext.broadcast(lk)
-
-    def pairset(df):
-        return {
-            (r.src, r.dst, round(r.est_jacc, 9))
-            for r in df.dropDuplicates(["src", "dst"]).collect()
-        }
-
-    got = pairset(fused_candidates_bcast(spark, bc, cfg, n_parts=4, full_est=True))
-    survivors = (
-        fused_candidates_lookup(sigs, bc, cfg)
-        .dropDuplicates(["src", "dst"])
-        .drop("est_jacc")
-    )
-    want = pairset(refine_est_pairs(survivors, sigs, cfg))
-    assert got == want
-    assert got, "degenerate fixture: no refined candidates"
-
-
-def test_fused_candidates_bcast_presorted_matches_legacy(spark, tiny_pages_df):
-    """Presorted-slice layout (cfg-built orders + bucket-aligned bounds)
-    == legacy per-task-scan layout, for both modes and cap settings."""
-    from dedup.config import DEFAULT_CONFIG
-    from dedup.ingest import representatives, to_docs
-    from dedup.signatures import with_slim_signatures
-    from dedup.candidates import fused_candidates_bcast, sig_lookup_arrays
-
-    for cap in (0, 3):
-        cfg = DEFAULT_CONFIG.with_(bucket_cap=cap)
-        docs = to_docs(tiny_pages_df, cfg)
-        sigs = with_slim_signatures(representatives(docs, cfg), cfg)
-        legacy = sig_lookup_arrays(sigs, with_bands=True)
-        sliced = sig_lookup_arrays(sigs, with_bands=True, cfg=cfg)
-        assert "order_lsh" in sliced and "order_lsh" not in legacy
-        bc_l = spark.sparkContext.broadcast(legacy)
-        bc_s = spark.sparkContext.broadcast(sliced)
-
-        def pairset(df):
-            return {
-                (r.src, r.dst, round(r.est_jacc, 9))
-                for r in df.dropDuplicates(["src", "dst"]).collect()
-            }
-
-        for kw in (
-            dict(cap=cap, n_parts=5),
-            dict(cap=cap, n_parts=3, use_simhash=False),
-            dict(cap=cap, n_parts=4, full_est=True),
-        ):
-            got = pairset(fused_candidates_bcast(spark, bc_s, cfg, **kw))
-            want = pairset(fused_candidates_bcast(spark, bc_l, cfg, **kw))
-            assert got == want, kw
-            assert got, ("degenerate fixture", kw)
-
-
-def test_fused_candidates_bcast_production_layout_matches(spark, tiny_pages_df):
-    """The EXACT sideband layout the pipeline ships (round-2 advice):
-    sorted_ids=False + parquet_dir (native pyarrow read of the spill in
-    file order, positional indexing) + cfg presorted slices — pinned
-    against the default collect-built sorted-ids layout across kernel
-    modes, rather than only indirectly via end-to-end pipeline tests."""
-    from dedup.config import DEFAULT_CONFIG as cfg
-    from dedup.ingest import representatives, to_docs
-    from dedup.pipeline import _spill
-    from dedup.signatures import with_slim_signatures
-    from dedup.candidates import fused_candidates_bcast, sig_lookup_arrays
-
-    docs = to_docs(tiny_pages_df, cfg)
-    sigs = _spill(with_slim_signatures(representatives(docs, cfg), cfg), "t-prod")
-    prod = sig_lookup_arrays(
-        sigs,
-        with_bands=True,
-        parquet_dir=sigs._dedup_spill_dir,
-        cfg=cfg,
-        sorted_ids=False,
-    )
-    ref = sig_lookup_arrays(sigs, with_bands=True)
-    bc_p = spark.sparkContext.broadcast(prod)
-    bc_r = spark.sparkContext.broadcast(ref)
-
-    def pairset(df):
-        return {
-            (r.src, r.dst, round(r.est_jacc, 9))
-            for r in df.dropDuplicates(["src", "dst"]).collect()
-        }
-
-    for kw in (
-        dict(n_parts=5),
-        dict(n_parts=3, use_simhash=False),
-        dict(n_parts=4, full_est=True),
-    ):
-        got = pairset(fused_candidates_bcast(spark, bc_p, cfg, **kw))
-        want = pairset(fused_candidates_bcast(spark, bc_r, cfg, **kw))
-        assert got == want, kw
-        assert got, ("degenerate fixture", kw)
