@@ -97,11 +97,31 @@ def connected_components(
     return _cc_loop(e, max_iter)
 
 
+def min_labels(u, v, n: int):
+    """Component labels of an n-vertex graph given as dense edge index
+    arrays ``u``/``v`` (numpy): min-label propagation with pointer
+    jumping. ``label[i]`` is the smallest vertex index of i's component."""
+    import numpy as np
+
+    label = np.arange(n, dtype=np.int64)
+    while True:
+        prev = label.copy()
+        np.minimum.at(label, u, label[v])
+        np.minimum.at(label, v, label[u])
+        while True:  # pointer jumping to local fixpoint
+            nxt = label[label]
+            if (nxt == label).all():
+                break
+            np.minimum(label, nxt, out=label)
+        if (label == prev).all():
+            return label
+
+
 def _cc_single_task(e: DataFrame) -> DataFrame:
-    """Small-graph path: min-label propagation with pointer jumping in
-    numpy, one task. Labels equal the loop's by the same invariant
-    (labels only decrease toward the component min; dense ids come from
-    np.unique which sorts, so the min dense index IS the min doc_id)."""
+    """Small-graph path: ``min_labels`` in numpy, one task. Labels equal
+    the loop's by the same invariant (labels only decrease toward the
+    component min; dense ids come from np.unique which sorts, so the min
+    dense index IS the min doc_id)."""
     import pandas as pd
 
     def run(batches):
@@ -116,19 +136,7 @@ def _cc_single_task(e: DataFrame) -> DataFrame:
         u_raw = np.concatenate(srcs)
         v_raw = np.concatenate(dsts)
         ids, flat = np.unique(np.concatenate([u_raw, v_raw]), return_inverse=True)
-        u, v = flat[: len(u_raw)], flat[len(u_raw) :]
-        label = np.arange(len(ids), dtype=np.int64)
-        while True:
-            prev = label.copy()
-            np.minimum.at(label, u, label[v])
-            np.minimum.at(label, v, label[u])
-            while True:  # pointer jumping to local fixpoint
-                nxt = label[label]
-                if (nxt == label).all():
-                    break
-                np.minimum(label, nxt, out=label)
-            if (label == prev).all():
-                break
+        label = min_labels(flat[: len(u_raw)], flat[len(u_raw) :], len(ids))
         yield pd.DataFrame({"doc_id": ids, "cluster_id": ids[label]})
 
     # coalesce, not repartition: e is checkpointed, so one task reads the

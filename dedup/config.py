@@ -120,10 +120,12 @@ class DedupConfig:
         return replace(self, **kw)
 
 
-#: default preset — s-curve threshold ≈ 0.707; P(candidate | J=0.8) ≈ 0.964
+#: default preset — s-curve threshold ≈ 0.707; band curve
+#: P(candidate | J=0.8) = 1 − (1 − 0.8^8)^16 ≈ 0.947
 DEFAULT_CONFIG = DedupConfig()
 
-#: high-recall preset — threshold ≈ (1/32)^(1/4) ≈ 0.42; P(cand | J=0.8) ≈ 0.9998.
+#: high-recall preset — threshold ≈ (1/32)^(1/4) ≈ 0.42; band curve
+#: P(cand | J=0.8) = 1 − (1 − 0.8^4)^32 ≈ 1 − 4.7·10⁻⁸.
 #: Used for the recall ≥ 0.99 gate (BASELINE.json:2). Both presets ship.
 HIGH_RECALL_CONFIG = DedupConfig(bands=32, rows_per_band=4)
 

@@ -201,7 +201,10 @@ def build_edges(
     # count is a metadata-only job. Above the cap (or for lazy callers)
     # the safe shuffle join stands — at cluster scale the co-location
     # comes from bucketed table layout instead (SURVEY §4.3).
-    n_docs = docs.count() if persist else None
+    n_docs = None
+    if persist:
+        with job_desc(docs.sparkSession, "dedup: spill sigsh"):
+            n_docs = docs.count()
     reps = representatives(
         docs, cfg, broadcast_ids=persist and n_docs <= BROADCAST_REP_IDS_MAX
     )

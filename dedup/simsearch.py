@@ -168,18 +168,16 @@ def cosine_pairs_arrow(pairs: DataFrame, keep: tuple[str, str] = ("src", "dst"),
     same read semantics as cosine_expr / the DuckDB oracle). The vector
     payloads die inside the kernel — only slim pair rows come back.
 
-    Rounding-tie caveat (round-2 advice): ``np.round`` is binary
-    half-even while Spark's ``round`` is HALF_UP on the decimal string —
-    the same divergence class CLAUDE.md documents for Spark vs DuckDB.
-    An exact .xxxx5 cosine tie would make this kernel disagree with the
-    expr twins by 1 ulp at 4 dp. Two SQL-oracle qkeys DO ride this
-    kernel — `ann_ivf_full` (since r4, hash-green) and `semantic_dedup`
-    (r5): accepted because the hazard is measure-zero on continuous
-    cosines (a pair must land within ~1 ulp of a 4-dp boundary; none
-    exists in the driver corpora, and the expr-twin oracles carry the
-    same-class F.round-vs-DuckDB boundary hazard anyway). If a driver
-    corpus ever manufactures exact boundary cosines, round via the
-    decimal string here first."""
+    Rounding-tie caveat: ``np.round`` is binary half-even while Spark's
+    ``round`` is HALF_UP on the decimal string — the same divergence
+    class as between Spark and DuckDB — so a cosine at a
+    4-dp boundary (x.xxxx5) would disagree with the expr twins by 1 ulp
+    at 4 dp. Two SQL-oracle qkeys ride this kernel, `ann_ivf_full` and
+    `semantic_dedup`; tests/test_simsearch.py::
+    test_cosine_qkeys_clear_rounding_boundaries asserts that every
+    cosine they round on the driver corpus lies more than 1e-9 from a
+    boundary. If a driver corpus ever manufactures boundary cosines,
+    round via the decimal string here first."""
     in_schema = dict(zip(pairs.schema.names, pairs.schema.fields))
     out_schema = StructType(
         [in_schema[c] for c in keep] + [StructField(out, DoubleType())]

@@ -1,13 +1,26 @@
 """Pair verification (SURVEY.md §2 E1-E5).
 
-The decider for 'near' edges is EXACT shingle-set Jaccard (E2), computed
-with built-in array functions on re-joined shingle arrays — JVM-side,
-no Python. MinHash-estimate (E1) is a cheap pure-SQL metric. The LCS
-ratio (E3) is the reference-parity matcher (the reference's pairwise
-string/LCS similarity, BASELINE.json:6), implemented as a vectorized
-pandas UDF with an O(n·m) numpy DP — like the reference it is only ever
-applied POST-blocking, to candidate pairs. Suffix-array containment
-(E5) detects long exact substring overlaps between candidate texts.
+The decider for 'near' edges is EXACT shingle-set Jaccard (E2). The
+pipeline computes it from normalized TEXT inside an Arrow kernel that
+hashes char k-grams (``hashing.hash_char_kgrams``, bit-identical to the
+signature stage) and intersects sorted hash sets, in one of two regimes
+picked by the est-passing pair count (``verify_jaccard_lazy``):
+
+- at most ``BROADCAST_PAIRS_MAX`` pairs — the binned verify: the pairs
+  are collected, binned on the driver by their component in the
+  candidate graph, and each bin's texts move once to one task, which
+  hashes every doc once;
+- above it — the at-scale shuffle branch: pair-side text joins and a
+  kernel that hashes each batch's distinct docs.
+
+``exact_jaccard_expr`` over shingle arrays is the pure-SQL twin the
+tests hold both kernels to. MinHash-estimate (E1) is a cheap pure-SQL
+metric. The LCS ratio (E3) is the reference-parity matcher (the
+reference's pairwise string/LCS similarity, BASELINE.json:6),
+implemented as a vectorized pandas UDF with an O(n·m) numpy DP — like
+the reference it is only ever applied POST-blocking, to candidate
+pairs. Suffix-array containment (E5) detects long exact substring
+overlaps between candidate texts.
 """
 
 from __future__ import annotations
@@ -355,11 +368,12 @@ def _exact_jaccard_text_arrow(withtext: DataFrame, cfg: DedupConfig) -> DataFram
 
 _PRE_COLS = ["pre0", "pre1", "pre2", "pre3"]
 
-#: below this many est-surviving pairs, the text-attach joins run
-#: broadcast-side (ids + pair frame ≲ 100 MB driver-side) instead of
-#: shuffling the docs text column; see verify_jaccard_lazy. Mirrors
-#: components.SMALL_GRAPH_EDGES: a runtime-adaptive scale switch, not a
-#: semantic knob (never changes which pairs verify).
+#: up to this many est-surviving pairs are collected to the driver (24 B
+#: each, ≲ 100 MB) and verified by the binned kernel; above it the
+#: pair-side text joins shuffle the docs text column instead; see
+#: verify_jaccard_lazy. Mirrors components.SMALL_GRAPH_EDGES: a
+#: runtime-adaptive scale switch, not a semantic knob (never changes
+#: which pairs verify).
 BROADCAST_PAIRS_MAX = 4_000_000
 
 
@@ -520,15 +534,22 @@ def verify_jaccard_lazy(
     for docs that survive the MinHash-estimate pre-filter — from TEXT,
     inside the exact-Jaccard kernel.
 
-    The scale rationale: shingle arrays (8 B per char window) are ~8×
-    the utf-8 text they derive from, and the pair join duplicates its
-    payload per pair — so the exact verifier joins the pruned docs'
-    ``norm_text`` to the pairs and re-hashes both sides in the kernel
-    (``_exact_jaccard_text_arrow``, bit-identical), moving megabytes
-    where the array join moved gigabytes. The est-passing pair frame is
-    localCheckpoint'ed — it is tiny and feeds three branches (endpoint
-    extraction + both sides of the text join), which would otherwise
-    re-run the candidate flood."""
+    Shingle arrays (8 B per char window) are ~8× the utf-8 text they
+    derive from, so verify moves text and re-hashes it in the kernel,
+    bit-identically. The est-passing pair frame is localCheckpoint'ed
+    and counted; the count picks the regime:
+
+    - ``≤ BROADCAST_PAIRS_MAX`` (≤ ~100 MB of pairs): the pairs are
+      collected, binned by candidate component (``_bin_sideband``) and
+      broadcast; one Arrow pass over docs keeps and tags the needed
+      texts, a ``repartition`` on the bin key moves each text once per
+      bin, and one kernel task per bin hashes each of its docs once
+      (``_binned_exact_jaccard``);
+    - above it: the pair-side text joins of ``join_pair_arrays`` feed
+      ``_exact_jaccard_text_arrow``, with no driver collect — the
+      at-scale path.
+
+    Both regimes return the same (src, dst, est_jacc, sim) rows."""
     from dedup.pipeline import job_desc
 
     # prefix-prefilter: ship only the first est_prefilter_perms MinHash
@@ -605,58 +626,33 @@ def verify_jaccard_lazy(
             est_frame = est_frame.drop("_floor")
     with job_desc(pairs.sparkSession, "dedup: candidates + est-filter"):
         passed = est_frame.localCheckpoint(eager=True)
-    # est-survivor verification ships TEXT, not shingle arrays: the
-    # semi-join prunes docs to the surviving pair endpoints, the pair
-    # join duplicates ~1 KB of utf-8 per side instead of ~8 KB of
-    # int64 hashes, and the kernel re-hashes both sides in-place
-    # (bit-identical kernel). The former est-survivor shingle spill
-    # stage (compute + parquet round-trip + 8×-heavier pair shuffle)
-    # disappears entirely — shuffle bytes were the pipeline's worst-
-    # scaling cost (profiled 2-7× task-time inflation 8→32 cores),
-    # while the extra per-side hash pass rides the near-linear-scaling
-    # blocked numpy kernel.
-    need = (
-        passed.select(F.col("src").alias("doc_id"))
-        .union(passed.select(F.col("dst").alias("doc_id")))
-        .distinct()
-    )
-    # Runtime-adaptive join strategy (the count is ~free: `passed` is
-    # checkpointed). Under AQE a shuffle join materializes EVERY map
-    # side before the strategy can be demoted to broadcast — so the
-    # plain semi-join shuffle-writes the full docs text column (306 MB
-    # at 500k docs) even though the probe side is ~1 MB of ids, and the
-    # pair joins re-shuffle the text again; profiled, that map write
-    # was the worst 8→32-core inflater (scan+write task time 6×). When
-    # the survivor frame is small — the common case after the two-stage
-    # est filter — broadcasting the id set and the pair frame makes the
-    # text scan a map-side filter: ZERO text bytes cross a shuffle
-    # until the ~(pairs × 1 KB) second attach join. Above the
-    # threshold (~100 MB broadcast) the shuffle plan is the right one
-    # and AQE handles it — the 10^12-doc design path.
-    if passed.count() <= BROADCAST_PAIRS_MAX:
-        texts = docs.join(F.broadcast(need), "doc_id", "left_semi").select(
-            "doc_id", "norm_text"
-        )
-        # BOTH sides attach map-side (pair frame broadcast into the text
-        # scan), so the only exchange is the final (src, dst) equi-join
-        # of two pair-sized halves carrying ONE text column each. The
-        # former shape attached t_a map-side but then shuffled the whole
-        # endpoint text frame against it for t_b — ~1.5× the bytes
-        # through the pipeline's worst-scaling (DRAM-bound) exchange.
-        a_side = texts.join(
-            F.broadcast(passed), F.col("doc_id") == F.col("src")
-        ).select("src", "dst", "est_jacc", F.col("norm_text").alias("t_a"))
-        b_side = texts.join(
-            F.broadcast(passed.select("src", "dst")),
-            F.col("doc_id") == F.col("dst"),
-        ).select("src", "dst", F.col("norm_text").alias("t_b"))
-        withtext = a_side.join(b_side, ["src", "dst"])
+        # the count is ~free: `passed` is checkpointed
+        n_pairs = passed.count()
+    if n_pairs <= BROADCAST_PAIRS_MAX:
+        # the pairs fit the driver (≤ 24 B each): bin them by candidate
+        # component and hash every endpoint once per bin
+        with job_desc(pairs.sparkSession, "dedup: verify + edge symmetrize"):
+            pair_tab = passed.select("src", "dst", "est_jacc").toArrow()
+        sims = _binned_exact_jaccard(pair_tab, docs, cfg)
     else:
+        # At-scale path. Under AQE a shuffle join materializes EVERY map
+        # side before it can be demoted to broadcast, so this plan
+        # shuffles the docs text column and re-shuffles the text per
+        # pair side; above the gate (~100 MB of pairs) that is the right
+        # plan and AQE handles it — the 10^12-doc design path. Text, not
+        # shingle arrays, crosses the exchange: ~1 KB of utf-8 per side
+        # instead of ~8 KB of int64 hashes, re-hashed in the kernel.
+        need = (
+            passed.select(F.col("src").alias("doc_id"))
+            .union(passed.select(F.col("dst").alias("doc_id")))
+            .distinct()
+        )
         texts = docs.join(need, "doc_id", "left_semi").select("doc_id", "norm_text")
-        withtext = join_pair_arrays(passed, texts, "norm_text", "t_a", "t_b")
+        sims = _exact_jaccard_text_arrow(
+            join_pair_arrays(passed, texts, "norm_text", "t_a", "t_b"), cfg
+        )
     return (
-        _exact_jaccard_text_arrow(withtext, cfg)
-        .filter(F.col("sim") >= cfg.jaccard_thresh)
+        sims.filter(F.col("sim") >= cfg.jaccard_thresh)
         .select(
             "src",
             "dst",
@@ -664,6 +660,199 @@ def verify_jaccard_lazy(
             "sim",
             F.lit("near").alias("kind"),
         )
+    )
+
+
+# --- binned verify (below BROADCAST_PAIRS_MAX) ----------------------------
+#
+# The est-passing pairs are collected to the driver, labelled with their
+# component in the candidate graph, sorted by it and cut into contiguous
+# bins of equal pair count. Each bin's texts travel to one task, which
+# hashes every doc once and intersects all the bin's pairs against the
+# shared hash buffer. A component is split only at a bin boundary, so a
+# doc reaches as many bins as its component spans — almost always one —
+# where the pair-side join shipped (and hashed) it once per pair side.
+
+#: pairs per verify bin; the bin count is clipped to
+#: [defaultParallelism, 4 × defaultParallelism] (see _n_bins)
+VERIFY_BIN_PAIRS = 4096
+
+
+def _n_bins(n_pairs: int, parallelism: int) -> int:
+    par = max(parallelism, 1)
+    p = min(max(-(-n_pairs // VERIFY_BIN_PAIRS), par), 4 * par)
+    return max(min(p, n_pairs), 1)
+
+
+def _murmur3_int(x: np.ndarray, seed: int = 42) -> np.ndarray:
+    """Spark's ``Murmur3Hash`` of an int column (what ``F.hash`` and a
+    hash ``repartition`` compute), vectorized over int32 values."""
+    u32 = np.uint32
+
+    def rotl(v, r):
+        return (v << u32(r)) | (v >> u32(32 - r))
+
+    k = rotl(x.astype(np.int32).view(u32) * u32(0xCC9E2D51), 15) * u32(0x1B873593)
+    h = rotl(u32(seed) ^ k, 13) * u32(5) + u32(0xE6546B64)
+    h ^= u32(4)  # fmix with the input length in bytes
+    h ^= h >> u32(16)
+    h *= u32(0x85EBCA6B)
+    h ^= h >> u32(13)
+    h *= u32(0xC2B2AE35)
+    h ^= h >> u32(16)
+    return h.view(np.int32)
+
+
+def _bin_keys(n_bins: int) -> np.ndarray:
+    """``keys[b]`` = the smallest non-negative int that ``repartition(
+    n_bins, key)`` places in partition b, so every bin gets a task of its
+    own. Placement only balances the bins; results never depend on it."""
+    keys = np.full(n_bins, -1, dtype=np.int64)
+    lo, step = 0, 8 * n_bins
+    while (keys < 0).any():
+        cand = np.arange(lo, lo + step, dtype=np.int64)
+        part, first = np.unique(
+            _murmur3_int(cand).astype(np.int64) % n_bins, return_index=True
+        )
+        todo = keys[part] < 0
+        keys[part[todo]] = cand[first[todo]]
+        lo += step
+    return keys
+
+
+def _bin_sideband(src: np.ndarray, dst: np.ndarray, est: np.ndarray, n_bins: int) -> dict:
+    """Driver-side binning of the pair arrays → the kernels' broadcast:
+    pairs sorted by (component, src, dst) with per-bin offsets, each
+    bin's partition key, and the (doc_id → bin key) map sorted by doc."""
+    from dedup.components import min_labels
+
+    n = len(src)
+    ids, flat = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    comp = min_labels(flat[:n], flat[n:], len(ids))[flat[:n]]
+    order = np.lexsort((dst, src, comp))
+    pair_bin = np.arange(n, dtype=np.int64) * n_bins // max(n, 1)
+    src, dst, est = src[order], dst[order], est[order]
+    # distinct (doc, bin) endpoints, sorted by doc
+    e_id, e_bin = np.concatenate([src, dst]), np.tile(pair_bin, 2)
+    o = np.lexsort((e_bin, e_id))
+    e_id, e_bin = e_id[o], e_bin[o]
+    new = np.ones(len(o), dtype=bool)
+    new[1:] = (e_id[1:] != e_id[:-1]) | (e_bin[1:] != e_bin[:-1])
+    keys = _bin_keys(n_bins)
+    return {
+        "src": src,
+        "dst": dst,
+        "est": est,
+        "bin_off": np.searchsorted(pair_bin, np.arange(n_bins + 1)),
+        "keys": keys,
+        "map_ids": e_id[new],
+        "map_keys": keys[e_bin[new]].astype(np.int32),
+    }
+
+
+def _tag_bin_batches(batches, side: dict):
+    """(doc_id, norm_text) batches → (bin, doc_id, norm_text) rows for
+    the docs some bin needs, once per bin that needs them."""
+    import pyarrow as pa
+
+    map_ids, map_keys = side["map_ids"], side["map_keys"]
+    for rb in batches:
+        ids = rb.column(rb.schema.get_field_index("doc_id")).to_numpy(zero_copy_only=False)
+        lo = np.searchsorted(map_ids, ids, "left")
+        cnt = np.searchsorted(map_ids, ids, "right") - lo
+        total = int(cnt.sum())
+        if total == 0:
+            continue
+        rows = np.repeat(np.arange(len(ids)), cnt)
+        # position of each emitted row in the map: lo[row] + rank within row
+        pos = np.repeat(lo - (np.cumsum(cnt) - cnt), cnt) + np.arange(total)
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(map_keys[pos]),
+                rb.column(rb.schema.get_field_index("doc_id")).take(rows),
+                rb.column(rb.schema.get_field_index("norm_text")).take(rows),
+            ],
+            names=["bin", "doc_id", "norm_text"],
+        )
+
+
+def _verify_bin_batches(batches, side: dict, k: int):
+    """One partition of tagged docs → (src, dst, est_jacc, sim) for every
+    pair of the bins it holds: each distinct doc is hashed once
+    (``hashing.hash_char_kgrams``; ids are content-sha representatives,
+    so equal id ⇒ identical text), then ``_jaccard_indexed`` intersects
+    the pairs against the shared hash buffer. A pair whose endpoint is
+    absent from docs is dropped, as the inner text join drops it."""
+    import pyarrow as pa
+
+    from dedup.hashing import hash_char_kgrams
+
+    rbs = [rb for rb in batches if rb.num_rows]
+    if not rbs:
+        return
+    tab = pa.Table.from_batches(rbs)
+    ids = tab.column("doc_id").to_numpy()
+    uniq, first = np.unique(ids, return_index=True)
+    txt = (
+        tab.column("norm_text").take(first).cast(pa.large_string()).combine_chunks()
+    )
+    flat, lcnt = hash_char_kgrams(*_str_col_np(txt, len(uniq)), k)
+    ho = np.zeros(len(uniq) + 1, dtype=np.int64)
+    np.cumsum(lcnt, out=ho[1:])
+    # bins by key (a key collision only puts two bins in one task)
+    kb = np.argsort(side["keys"])
+    held_keys = np.unique(tab.column("bin").to_numpy())
+    held = kb[np.searchsorted(side["keys"], held_keys, sorter=kb)]
+    off = side["bin_off"]
+    sel = np.concatenate([np.arange(off[b], off[b + 1]) for b in held])
+    src, dst, est = side["src"][sel], side["dst"][sel], side["est"][sel]
+    ia = np.minimum(np.searchsorted(uniq, src), len(uniq) - 1)
+    ib = np.minimum(np.searchsorted(uniq, dst), len(uniq) - 1)
+    ok = (uniq[ia] == src) & (uniq[ib] == dst)
+    if not ok.all():
+        src, dst, est, ia, ib = src[ok], dst[ok], est[ok], ia[ok], ib[ok]
+    yield pa.RecordBatch.from_arrays(
+        [
+            pa.array(src),
+            pa.array(dst),
+            pa.array(est, from_pandas=True),  # NaN ← a null estimate
+            pa.array(_jaccard_indexed(flat, ho, ia, ib)),
+        ],
+        names=["src", "dst", "est_jacc", "sim"],
+    )
+
+
+def _binned_exact_jaccard(
+    pairs, docs: DataFrame, cfg: DedupConfig, n_bins: int | None = None
+) -> DataFrame:
+    """Driver-side pair table (src, dst, est_jacc) + docs → (src, dst,
+    est_jacc, sim) through the binned kernel: one broadcast sideband,
+    one Arrow pass over docs that keeps and tags the needed texts, one
+    ``repartition`` that moves each text once per bin, one kernel task
+    per bin. ``n_bins`` defaults to ``_n_bins`` of the pair count."""
+    spark = docs.sparkSession
+    schema = "src long, dst long, est_jacc double, sim double"
+    n = pairs.num_rows
+    if n == 0:
+        return spark.createDataFrame([], schema)
+    if n_bins is None:
+        n_bins = _n_bins(n, spark.sparkContext.defaultParallelism)
+    side = _bin_sideband(
+        pairs.column("src").to_numpy(),
+        pairs.column("dst").to_numpy(),
+        pairs.column("est_jacc").to_numpy().astype(np.float64),
+        n_bins,
+    )
+    bc = spark.sparkContext.broadcast(side)
+    k = cfg.k
+    return (
+        docs.select("doc_id", "norm_text")
+        .mapInArrow(
+            lambda it: _tag_bin_batches(it, bc.value),
+            schema="bin int, doc_id long, norm_text string",
+        )
+        .repartition(n_bins, "bin")
+        .mapInArrow(lambda it: _verify_bin_batches(it, bc.value, k), schema=schema)
     )
 
 

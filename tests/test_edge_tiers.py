@@ -183,6 +183,41 @@ def test_edge_builder_identical_on_every_tier(spark, docs, sigs, monkeypatch):
     assert got["salted_lsh_candidates"] == want
 
 
+def test_verify_shuffle_branch_matches_binned(spark, docs, sigs, monkeypatch):
+    """Above ``BROADCAST_PAIRS_MAX`` verify takes the at-scale shuffle
+    branch (pair-side text joins + ``_exact_jaccard_text_arrow``); at or
+    below it, the binned kernel. Forcing the gate to 0 must give the
+    identical near edges (src, dst, est_jacc, sim) on the tiny corpus;
+    counting wrappers check which branch ran."""
+    from dedup import verify
+
+    calls: dict[str, int] = {}
+    for name in ("_binned_exact_jaccard", "_exact_jaccard_text_arrow"):
+        orig = getattr(verify, name)
+
+        def wrapper(*a, _name=name, _orig=orig, **k):
+            calls[_name] = calls.get(_name, 0) + 1
+            return _orig(*a, **k)
+
+        monkeypatch.setattr(verify, name, wrapper)
+
+    n_docs = docs.count()
+    cols = ("src", "dst", "est_jacc", "sim")
+
+    def near_edges():
+        calls.clear()
+        edges = pipeline.edges_from_signatures(docs, sigs, DEFAULT_CONFIG, n_docs)
+        return {tuple(r) for r in edges.filter("kind = 'near'").select(*cols).collect()}
+
+    binned = near_edges()
+    assert calls == {"_binned_exact_jaccard": 1}, calls
+    monkeypatch.setattr(verify, "BROADCAST_PAIRS_MAX", 0)
+    shuffled = near_edges()
+    assert calls == {"_exact_jaccard_text_arrow": 1}, calls
+    assert binned, "degenerate fixture: no near edges"
+    assert shuffled == binned, (sorted(shuffled - binned)[:5], sorted(binned - shuffled)[:5])
+
+
 def test_job_edges_stage_shares_the_builder(spark, tiny_pages_df, tmp_path, monkeypatch):
     """Under the default config the job's edges stage reaches the
     broadcast tier through ``pipeline`` (one call), commits an edges

@@ -303,3 +303,68 @@ def test_spill_sweep_removes_only_dead_process_dirs(tmp_path, monkeypatch):
     assert not os.path.exists(dead)
     assert mine.is_dir() and os.path.isdir(new)
     assert os.path.basename(new).startswith(f"dedup-spill-{os.getpid()}-live-")
+
+
+#: Spark jobs one run_dedup call launches on tiny_pages (local[4]): the
+#: url probe (3), docs spill (1), signature spill with its doc count
+#: (5), candidates + est-filter checkpoint and its pair count (4), pair
+#: collect + binned verify + edge symmetrize (6), CC (2)
+RUN_DEDUP_JOBS = 21
+
+
+@pytest.fixture(scope="module")
+def run_jobs(spark, tiny_pages_df):
+    """(job id, description, job group) of every Spark job launched
+    inside one run_dedup call — the id window, so the url probe's
+    thread is counted too — read from the SparkContext's status store."""
+    import uuid
+
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+
+    def jobs() -> dict:
+        jsc.listenerBus().waitUntilEmpty()
+        seq = jsc.statusStore().jobsList(None)
+        out = {}
+        for i in range(seq.size()):
+            j = seq.apply(i)
+            opt = [j.description(), j.jobGroup()]
+            out[j.jobId()] = tuple(o.get() if o.isDefined() else None for o in opt)
+        return out
+
+    group = f"run-dedup-{uuid.uuid4().hex[:8]}"
+    before = set(jobs())
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        run_dedup(tiny_pages_df, DEFAULT_CONFIG)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return group, [(k, *v) for k, v in sorted(jobs().items()) if k not in before]
+
+
+def test_run_dedup_every_job_is_labelled(run_jobs, monkeypatch):
+    """Every eager action of run_dedup runs under a job_desc label that
+    perfbench's trace maps to a layer (or the url probe): a new action
+    cannot land in ``pipeline.unlabelled_task_s`` unnoticed."""
+    import os
+
+    # perfbench.trace imports BENCH/profile_jobs, which setdefaults
+    # SPARK_DRIVER_MEM; keep the test process's environment as it was
+    monkeypatch.setenv("SPARK_DRIVER_MEM", os.environ.get("SPARK_DRIVER_MEM", ""))
+    from perfbench.trace import LABEL_LAYER, PROBE_LABEL
+
+    _group, jobs = run_jobs
+    assert jobs
+    bad = [(j, d) for j, d, _g in jobs if d not in LABEL_LAYER and d != PROBE_LABEL]
+    assert not bad, bad
+
+
+def test_run_dedup_job_count_is_pinned(run_jobs):
+    """The number of Spark jobs one run_dedup call launches is pinned
+    (fixed cost per run; ROADMAP direction C). A change that adds or
+    removes one updates RUN_DEDUP_JOBS and says why. Every job but the
+    url probe's runs in the caller's job group."""
+    group, jobs = run_jobs
+    assert len(jobs) == RUN_DEDUP_JOBS, [d for _j, d, _g in jobs]
+    outside = {d for _j, d, g in jobs if g != group}
+    assert outside <= {"dedup: url-uniqueness probe"}, outside

@@ -458,3 +458,45 @@ def test_pq_topk_in_corpus_queries_get_k_rows(spark, vecs):
     many = pq_topk(corpus.repartition(4), queries, k=k, codebook=cb).collect()
     assert sorted(many) == sorted(one)
     corpus.unpersist()
+
+
+def test_cosine_qkeys_clear_rounding_boundaries(spark, monkeypatch):
+    """``cosine_pairs_arrow`` rounds with numpy's binary half-even rule;
+    Spark's ``round`` and the DuckDB oracle round HALF_UP on the decimal
+    string. They can disagree only on a cosine at a 4-dp boundary
+    (x.xxxx5). Over the driver corpus (sf0.01, the scale the oracle
+    records run at), every cosine the two SQL-oracle qkeys that ride
+    the kernel round — ``ann_ivf_full`` and ``semantic_dedup`` — lies
+    more than 1e-9 from such a boundary. (sf0.001 and sf0.1 hold
+    semantic_dedup cosines 4.8e-10 and 3.2e-10 from one: still ~10^5×
+    the summation noise between engines, but under this margin.)"""
+    import os
+
+    import numpy as np
+
+    from dedup import simsearch
+    from dedup.queries import queries
+    from dedup.simsearch import _batch_matrix
+
+    orig = simsearch.cosine_pairs_arrow
+    seen = []
+
+    def capture(pairs, *a, **k):
+        seen.append((pairs, k.get("va", "va"), k.get("vb", "vb")))
+        return orig(pairs, *a, **k)
+
+    monkeypatch.setattr(simsearch, "cosine_pairs_arrow", capture)
+    driver_sf = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
+    for name in ("ann_ivf_full", "semantic_dedup"):
+        seen.clear()
+        assert queries()[name](spark, driver_sf).count() > 0
+        assert seen, f"{name} no longer rides cosine_pairs_arrow"
+        for pairs, va, vb in seen:
+            t = pairs.select(va, vb).toArrow()
+            a, b = _batch_matrix(t.column(va)), _batch_matrix(t.column(vb))
+            cos = np.einsum("ij,ij->i", a, b) / np.sqrt(
+                np.einsum("ij,ij->i", a, a) * np.einsum("ij,ij->i", b, b)
+            )
+            x = cos * 1e4
+            margin = np.abs(x - np.floor(x) - 0.5) / 1e4
+            assert len(cos) > 0 and margin.min() > 1e-9, (name, margin.min())

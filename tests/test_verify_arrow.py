@@ -174,14 +174,24 @@ def test_slim_signatures_match_full_stage(spark, tiny_pages_df):
 
 
 def test_exact_jaccard_text_arrow_matches_shingle_sql(spark):
-    """The text-input kernel (hash k-grams in-kernel, then intersect)
-    must equal shingling via the pinned SQL expression + SQL Jaccard —
-    including unicode, short-doc and empty texts. (Null texts never
-    reach the verifier — endpoints must carry signatures, and null
-    norm_text rows are filtered before signing.)"""
+    """Both text-input kernels — the pair-side kernel of the shuffle
+    branch and the binned kernel — hash k-grams in-kernel and intersect;
+    each must equal shingling via the pinned SQL expression + SQL
+    Jaccard, including unicode, short-doc and empty texts. The pairs
+    include a 20-edge chain component that the binned kernel must split
+    across two bins. (Null texts never reach the verifier — endpoints
+    must carry signatures, and null norm_text rows are filtered before
+    signing.)"""
+    import numpy as np
+    import pyarrow as pa
+
     from dedup.config import DedupConfig
     from dedup.signatures import shingles_expr
-    from dedup.verify import _exact_jaccard_text_arrow
+    from dedup.verify import (
+        _bin_sideband,
+        _binned_exact_jaccard,
+        _exact_jaccard_text_arrow,
+    )
 
     cfg = DedupConfig()
     rng = random.Random(11)
@@ -191,14 +201,19 @@ def test_exact_jaccard_text_arrow_matches_shingle_sql(spark):
         for _ in range(120)
     ]
     texts[0], texts[1], texts[2] = "", "ab", "a"  # short-doc rules
-    rows = [
-        (i, i + 1_000_000, 0.5, texts[i], texts[rng.randrange(len(texts))])
-        for i in range(len(texts))
-    ]
+    # one text per doc id (ids are content representatives): a chain
+    # component over ids 0..20, whose min id sorts it first, then one
+    # two-doc component per text
+    doc_text = {j: texts[rng.randrange(len(texts))] for j in range(21)}
+    pair_ids = [(j, j + 1) for j in range(20)]
+    for i, t in enumerate(texts):
+        doc_text[100 + i] = t
+        doc_text[1_000_000 + i] = texts[rng.randrange(len(texts))]
+        pair_ids.append((100 + i, 1_000_000 + i))
+    rows = [(a, b, 0.5, doc_text[a], doc_text[b]) for a, b in pair_ids]
     pairs = spark.createDataFrame(
         rows, "src long, dst long, est_jacc double, t_a string, t_b string"
     )
-    got = {(r.src, r.dst): r.sim for r in _exact_jaccard_text_arrow(pairs, cfg).collect()}
     sh = pairs.select(
         "src",
         "dst",
@@ -209,7 +224,107 @@ def test_exact_jaccard_text_arrow_matches_shingle_sql(spark):
         (r.src, r.dst): r.sim
         for r in sh.select("src", "dst", exact_jaccard_expr().alias("sim")).collect()
     }
+    got = {(r.src, r.dst): r.sim for r in _exact_jaccard_text_arrow(pairs, cfg).collect()}
     assert got == want
+
+    # 140 pairs in 14 bins of 10: the chain holds sorted positions 0..19
+    n_bins = 14
+    src = np.array([a for a, _b in pair_ids], dtype=np.int64)
+    dst = np.array([b for _a, b in pair_ids], dtype=np.int64)
+    side = _bin_sideband(src, dst, np.full(len(src), 0.5), n_bins)
+    assert set(side["map_keys"][side["map_ids"] == 10]) == set(side["keys"][:2])
+    docs = spark.createDataFrame(list(doc_text.items()), "doc_id long, norm_text string")
+    tab = pa.table({"src": src, "dst": dst, "est_jacc": np.full(len(src), 0.5)})
+    binned = {
+        (r.src, r.dst): r.sim
+        for r in _binned_exact_jaccard(tab, docs, cfg, n_bins=n_bins).collect()
+    }
+    assert binned == want
+
+
+def test_binned_kernel_hashes_each_doc_once(monkeypatch):
+    """Run the binned kernel's two passes in process, one call per bin
+    (what the ``repartition`` on the bin key hands each task): when no
+    component straddles a bin boundary, the docs ``hash_char_kgrams``
+    receives, summed over bins, are exactly the distinct pair endpoints,
+    and every pair is emitted once with its exact Jaccard. Docs no pair
+    needs are dropped by the tagging pass."""
+    import numpy as np
+    import pyarrow as pa
+
+    from dedup import hashing
+    from dedup.verify import _bin_sideband, _tag_bin_batches, _verify_bin_batches
+    from tests.oracle import jaccard, shingle_set
+
+    k = 5
+    rng = random.Random(3)
+    words = ["alpha", "beta", "gamma", "delta", "ω"]
+    text = {
+        d: " ".join(rng.choice(words) for _ in range(rng.randint(3, 30)))
+        for d in range(40)
+    }
+    # 4 triangles over docs 0..11 (3 pairs each) in 4 bins of 3 pairs;
+    # docs 12..39 are in no pair
+    pair_ids = [
+        (3 * t + i, 3 * t + j) for t in range(4) for i, j in ((0, 1), (0, 2), (1, 2))
+    ]
+    src = np.array([a for a, _b in pair_ids], dtype=np.int64)
+    dst = np.array([b for _a, b in pair_ids], dtype=np.int64)
+    side = _bin_sideband(src, dst, np.linspace(0.1, 0.9, len(src)), 4)
+    ids = list(text)
+    batches = pa.table(
+        {"doc_id": pa.array(ids, pa.int64()), "norm_text": [text[d] for d in ids]}
+    ).to_batches(max_chunksize=16)
+    tagged = pa.Table.from_batches(list(_tag_bin_batches(iter(batches), side)))
+    assert tagged.num_rows == 12
+
+    hashed = []
+    real = hashing.hash_char_kgrams
+
+    def counting(buf, offsets, kk):
+        hashed.append(len(offsets) - 1)
+        return real(buf, offsets, kk)
+
+    monkeypatch.setattr(hashing, "hash_char_kgrams", counting)
+    bins = tagged.column("bin").to_numpy()
+    out = []
+    for key in np.unique(bins):
+        part = tagged.filter(pa.array(bins == key)).to_batches(max_chunksize=2)
+        out += [r for rb in _verify_bin_batches(iter(part), side, k) for r in rb.to_pylist()]
+    assert sum(hashed) == len(np.unique(np.concatenate([src, dst]))) == 12
+    assert len(hashed) == 4
+    got = {(r["src"], r["dst"]): r["sim"] for r in out}
+    assert len(got) == len(out) == len(pair_ids)
+    for a, b in pair_ids:
+        want = jaccard(shingle_set(text[a], k), shingle_set(text[b], k))
+        assert abs(got[(a, b)] - want) < 1e-12, (a, b)
+
+
+def test_bin_keys_land_on_own_partition(spark):
+    """The verify bin keys are picked with a numpy port of Spark's
+    Murmur3 hash: it must equal ``F.hash`` on ints, and each bin's key
+    must land in a partition of its own under ``repartition(n, "bin")``
+    — a change to Spark's hash placement fails here instead of silently
+    stacking bins on one task."""
+    import numpy as np
+
+    from dedup.verify import _bin_keys, _murmur3_int
+
+    df = spark.range(-1000, 2000).select(
+        F.col("id").cast("int").alias("x"), F.hash(F.col("id").cast("int")).alias("h")
+    )
+    want = {r.x: r.h for r in df.collect()}
+    xs = np.array(sorted(want), dtype=np.int64)
+    assert dict(zip(xs.tolist(), _murmur3_int(xs).tolist())) == want
+    for n in (1, 2, 3, 4, 8, 13, 16):
+        keys = _bin_keys(n)
+        placed = (
+            spark.createDataFrame([(int(v),) for v in keys], "bin int")
+            .repartition(n, "bin")
+            .select("bin", F.spark_partition_id().alias("p"))
+            .collect()
+        )
+        assert {r.bin: r.p for r in placed} == {int(v): b for b, v in enumerate(keys)}, n
 
 
 def test_refine_est_pairs_recall_safe(spark, tiny_pages_df):
