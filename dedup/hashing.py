@@ -218,6 +218,31 @@ def xxh64_matrix(mat: np.ndarray, seed: int = SPARK_XXHASH64_SEED) -> np.ndarray
 _KGRAM_BLOCK = 16384
 
 
+def str_buffers(arr) -> tuple[np.ndarray, np.ndarray]:
+    """Arrow StringArray → (uint8 data-buffer view, int64[n+1] absolute
+    byte offsets) — the zero-copy form ``hash_char_kgrams`` consumes.
+    Nulls are filled with '' first (empty doc ⇒ the pinned short-doc
+    shingle rule applies)."""
+    import pyarrow as pa
+
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    if arr.null_count:
+        arr = pa.compute.fill_null(arr, "")
+    n = len(arr)
+    off_dtype = "<i8" if pa.types.is_large_string(arr.type) else "<i4"
+    bufs = arr.buffers()
+    offsets = np.frombuffer(bufs[1], dtype=off_dtype)[
+        arr.offset : arr.offset + n + 1
+    ].astype(np.int64)
+    data = (
+        np.frombuffer(bufs[2], dtype=np.uint8)
+        if bufs[2] is not None
+        else np.empty(0, dtype=np.uint8)
+    )
+    return data, offsets
+
+
 def hash_char_kgrams(
     buf: np.ndarray, offsets: np.ndarray, k: int
 ) -> tuple[np.ndarray, np.ndarray]:
@@ -404,8 +429,6 @@ def minhash_from_hashes(hashes: np.ndarray, consts: np.ndarray) -> np.ndarray:
         np.minimum(out, z.min(axis=1), out=out)
     return out
 
-
-_PERM_BLOCK = 16  # perms per block: bounds the (block × total_shingles) matrix
 
 #: doc-group block size (elements) for the cache-blocked batch kernels:
 #: block + two scratch buffers ≈ 768 KB — L2-resident on this class of

@@ -104,15 +104,11 @@ def latest_by_url(pages: DataFrame) -> DataFrame:
 
 
 def to_docs(
-    pages: DataFrame,
-    cfg: DedupConfig,
-    recompute_text: bool = False,
-    assume_unique_urls: bool = False,
+    pages: DataFrame, cfg: DedupConfig, assume_unique_urls: bool = False
 ) -> DataFrame:
-    """pages → docs frame (schema.DOCS). When ``recompute_text`` the text
-    column is re-derived from html via the versioned extractor (the
-    BASELINE.json:15 invariant path); otherwise the provided text column
-    is trusted and the extractor only fills nulls.
+    """pages → docs frame (schema.DOCS). The provided text column is
+    trusted; the versioned extractor (the BASELINE.json:15 invariant
+    path) only fills null text from html.
 
     ``assume_unique_urls``: when the caller has VERIFIED there is at most
     one capture per url (run_dedup counts — one pruned scan of the url
@@ -124,7 +120,7 @@ def to_docs(
     the aggregation path runs unchanged; at cluster scale a
     bucketed-by-url table layout makes it shuffle-free anyway
     (SURVEY §4.3)."""
-    latest = _resolve_latest(pages, recompute_text, assume_unique_urls)
+    latest = _resolve_latest(pages, assume_unique_urls)
     return (
         latest.select("url", "warc_ts", "lang", "text")
         .withColumn("doc_id", F.xxhash64("url"))
@@ -135,55 +131,45 @@ def to_docs(
     )
 
 
-def _resolve_latest(
-    pages: DataFrame, recompute_text: bool, assume_unique_urls: bool
-) -> DataFrame:
+def _resolve_latest(pages: DataFrame, assume_unique_urls: bool) -> DataFrame:
     """Shared head of the ingest stage: pages → one (url, warc_ts, lang,
     text) row per url (latest capture, text resolved). Tail-agnostic —
     ``to_docs`` attaches the derived columns via JVM expressions,
     ``to_docs_arrow`` via the fused Arrow kernel."""
-    if recompute_text:
-        # extract only the winning capture per url — the extractor is
-        # the expensive path, so rank first, extract after
-        ranked = pages if assume_unique_urls else asof_latest(pages)
-        return ranked.select(
-            "url", "warc_ts", "lang", extract_text_udf(F.col("html")).alias("text")
+    # resolve text per row BEFORE the as-of window so the html payload
+    # (≈half the page bytes) never enters the window shuffle — it is
+    # dead weight after the null-fill. The fill is per-row, so pre- vs
+    # post-window is semantically identical; it only runs on null-text
+    # rows.
+    #
+    # TWO scans, split on text-nullness, not one scan with a
+    # when(): a single-scan plan must produce the html column for
+    # every row just to feed the (almost always dead) null-fill
+    # branch — ~½ the table bytes read, decompressed, and carried
+    # through the project for nothing on a trusted corpus. Split,
+    # the trusted scan PRUNES html at the parquet reader (it never
+    # appears in its ReadSchema) and the null-text scan pushes
+    # `text IS NULL` down to row-group stats — on an all-trusted
+    # corpus it reads ~zero rows. The extractor input is gated to
+    # non-null html; null html + null text stays null text
+    # (identical to the old when() semantics), and the downstream
+    # latest_by_url is an aggregation, so the union order is
+    # irrelevant.
+    cols = ["url", "warc_ts", "lang"]
+    trusted = pages.filter(F.col("text").isNotNull()).select(*cols, "text")
+    if "html" in pages.columns:
+        fixed = pages.filter(F.col("text").isNull()).select(
+            *cols,
+            F.when(
+                F.col("html").isNotNull(), extract_text_udf(F.col("html"))
+            ).alias("text"),
         )
     else:
-        # trusted-text path: resolve text per row BEFORE the as-of
-        # window so the html payload (≈half the page bytes) never
-        # enters the window shuffle — it is dead weight after the
-        # null-fill. The fill is per-row, so pre- vs post-window is
-        # semantically identical; it only runs on null-text rows.
-        #
-        # TWO scans, split on text-nullness, not one scan with a
-        # when(): a single-scan plan must produce the html column for
-        # every row just to feed the (almost always dead) null-fill
-        # branch — ~½ the table bytes read, decompressed, and carried
-        # through the project for nothing on a trusted corpus. Split,
-        # the trusted scan PRUNES html at the parquet reader (it never
-        # appears in its ReadSchema) and the null-text scan pushes
-        # `text IS NULL` down to row-group stats — on an all-trusted
-        # corpus it reads ~zero rows. The extractor input is gated to
-        # non-null html; null html + null text stays null text
-        # (identical to the old when() semantics), and the downstream
-        # latest_by_url is an aggregation, so the union order is
-        # irrelevant.
-        cols = ["url", "warc_ts", "lang"]
-        trusted = pages.filter(F.col("text").isNotNull()).select(*cols, "text")
-        if "html" in pages.columns:
-            fixed = pages.filter(F.col("text").isNull()).select(
-                *cols,
-                F.when(
-                    F.col("html").isNotNull(), extract_text_udf(F.col("html"))
-                ).alias("text"),
-            )
-        else:
-            fixed = pages.filter(F.col("text").isNull()).select(
-                *cols, F.col("text")
-            )
-        pre = trusted.unionByName(fixed)
-        return pre if assume_unique_urls else latest_by_url(pre)
+        fixed = pages.filter(F.col("text").isNull()).select(
+            *cols, F.col("text")
+        )
+    pre = trusted.unionByName(fixed)
+    return pre if assume_unique_urls else latest_by_url(pre)
 
 
 def latest_docs_by_url(docs: DataFrame) -> DataFrame:
@@ -212,7 +198,6 @@ def latest_docs_by_url(docs: DataFrame) -> DataFrame:
 def to_docs_arrow(
     pages: DataFrame,
     cfg: DedupConfig,
-    recompute_text: bool = False,
     assume_unique_urls: bool = False,
     keep_text: bool = True,
     carry_tiebreak: bool = False,
@@ -244,7 +229,7 @@ def to_docs_arrow(
     would have, even though the raw text is gone by then. 8 B/row."""
     import pyarrow as pa
 
-    latest = _resolve_latest(pages, recompute_text, assume_unique_urls)
+    latest = _resolve_latest(pages, assume_unique_urls)
     if carry_tiebreak:
         latest = latest.withColumn("_tb", F.xxhash64("text", "lang"))
     ws_chars = " \t\n\r\f\x0b"
@@ -255,7 +240,7 @@ def to_docs_arrow(
         import numpy as np
         import pyarrow.compute as pc
 
-        from dedup.hashing import xxh64_strings
+        from dedup.hashing import str_buffers, xxh64_strings
         from dedup.text import normalize_text_py
 
         for rb in batches:
@@ -265,11 +250,9 @@ def to_docs_arrow(
             idx = rb.schema.get_field_index
             url = rb.column(idx("url"))
             txt = rb.column(idx("text"))
-            udata, uoff = _str_buffers(pc.fill_null(url, ""))
+            udata, uoff = str_buffers(url)
             doc_id = pa.array(xxh64_strings(udata, uoff).view(np.int64))
-            tdata, toff = _str_buffers(
-                pc.fill_null(txt, "") if txt.null_count else txt
-            )
+            tdata, toff = str_buffers(txt)
             seg = tdata[toff[0] : toff[-1]]
             if seg.size == 0 or int(seg.max()) < 0x80:
                 # pure-ASCII batch: fully vectorized (Arrow C++/RE2).
@@ -304,9 +287,7 @@ def to_docs_arrow(
                         ),
                         characters=" ",
                     )
-                ndata, noff = _str_buffers(
-                    pc.fill_null(norm, "") if norm.null_count else norm
-                )
+                ndata, noff = str_buffers(norm)
                 n_chars_np = np.diff(noff)  # ASCII: bytes == codepoints
                 mv = memoryview(ndata)
                 if norm.null_count:
@@ -368,28 +349,6 @@ def to_docs_arrow(
     )
 
 
-def _str_buffers(arr):
-    """Arrow StringArray → (uint8 data-buffer view, int64[n+1] absolute
-    byte offsets). Caller must have filled nulls."""
-    import numpy as np
-    import pyarrow as pa
-
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    n = len(arr)
-    off_dtype = "<i8" if pa.types.is_large_string(arr.type) else "<i4"
-    bufs = arr.buffers()
-    offsets = np.frombuffer(bufs[1], dtype=off_dtype)[
-        arr.offset : arr.offset + n + 1
-    ].astype(np.int64)
-    data = (
-        np.frombuffer(bufs[2], dtype=np.uint8)
-        if bufs[2] is not None
-        else np.empty(0, dtype=np.uint8)
-    )
-    return data, offsets
-
-
 def exact_groups(docs: DataFrame) -> DataFrame:
     """content_sha → (canon_id = min doc_id, group size). Hash aggregate
     with automatic partial (map-side) combine; no collect anywhere."""
@@ -416,24 +375,31 @@ def exact_edges(docs: DataFrame) -> DataFrame:
     )
 
 
+#: broadcast the rep-id frame (8 B/row) below this many docs — 20M ids
+#: ≈ 160 MB broadcast, comfortably inside executor memory; beyond that
+#: fall back to the shuffle join (bucketed layout at real scale)
+BROADCAST_REP_IDS_MAX = 20_000_000
+
+
 def representatives(
-    docs: DataFrame, cfg: DedupConfig, broadcast_ids: bool = False
+    docs: DataFrame, cfg: DedupConfig, n_docs: int | None = None
 ) -> DataFrame:
     """One doc per content_sha (the min-doc_id member), long enough to
     shingle. Only these rows flow into signatures/LSH.
 
-    ``broadcast_ids``: hint-broadcast the canon-id frame. Without it the
-    left-semi join shuffles the full docs side — AQE materializes every
-    shuffle-join map side before it can demote to broadcast, so the text
-    column (the bulk of the bytes) gets shuffled even when the id frame
-    is tiny at runtime (same pathology as verify.BROADCAST_PAIRS_MAX).
-    Callers that know the rep count is bounded (pipeline counts the
-    materialized docs frame) pass True and the docs text never crosses a
-    shuffle. At cluster scale with billions of reps leave it False and
-    rely on bucketed table layout (SURVEY §4.3) for the co-located join.
+    ``n_docs`` (the docs count, None when unknown) gates a broadcast
+    hint on the canon-id frame: at most ``BROADCAST_REP_IDS_MAX`` docs
+    broadcast it. Without the hint the left-semi join shuffles the full
+    docs side — AQE materializes every shuffle-join map side before it
+    can demote to broadcast, so the text column (the bulk of the bytes)
+    gets shuffled even when the id frame is tiny at runtime (306 MB of
+    shuffle write at 500k docs; same pathology as
+    verify.BROADCAST_PAIRS_MAX). Above the cap, or with no count, the
+    shuffle join stands — at cluster scale with billions of reps the
+    co-location comes from bucketed table layout (SURVEY §4.3).
     """
     ids = exact_groups(docs).select(F.col("canon_id").alias("doc_id"))
-    if broadcast_ids:
+    if n_docs is not None and n_docs <= BROADCAST_REP_IDS_MAX:
         ids = F.broadcast(ids)
     return (
         docs.join(ids, "doc_id", "left_semi")

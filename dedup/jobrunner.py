@@ -117,8 +117,8 @@ def dedup_stages(
     downstream curation join — SortMergeJoins with zero Exchange on
     either side, on every resume, in any session."""
     cfg = r.cfg
-    # fills the caller's persist and gives the edge builder's broadcast
-    # gates their doc count
+    # fills the caller's persist and gives the rep-id and edge-builder
+    # broadcast gates their doc count
     n_docs = docs.count()
 
     # committed signature table is the SLIM form (band hashes + byte-packed
@@ -127,7 +127,7 @@ def dedup_stages(
     # reads only it. Same kernel as pipeline.build_edges' spill. The
     # kernel output is persisted under the range partitioner: its
     # bound-sampling jobs would otherwise each re-run the signature kernel.
-    kernel = with_slim_signatures(representatives(docs, cfg), cfg).persist()
+    kernel = with_slim_signatures(representatives(docs, cfg, n_docs), cfg).persist()
     try:
         sigs = r.stage(
             "signatures", lambda: range_partition_by_sig_prefix(kernel),

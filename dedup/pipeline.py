@@ -5,10 +5,10 @@ lazy, nothing executes until an action. ``run_dedup`` wires them
 together for library/driver use; jobs/run_dedup.py adds TableIO
 commits, lineage, and resume on top for the spark-submit path.
 
-    pages ──ingest──> docs ──reps──> shingles ──sig──> signatures
-      docs ──────────exact edges──────────────┐            │bands
-      signatures ──simhash candidates──┐      │            │
-      bands ──lsh candidates──> union ─┴─verify(jaccard)──> edges
+    pages ──ingest──> docs ──reps──sig──> slim signatures (spill)
+      docs ──────────exact edges──────────────────────┐    │bands
+      signatures ──simhash candidates──┐              │    │
+      bands ──lsh candidates──> union ─┴─est filters──verify(jaccard)──> edges
       edges ──connected components──> clusters ──assign──> output
 """
 
@@ -36,13 +36,7 @@ from dedup.skew import salted_lsh_candidates
 from dedup.components import assign_clusters, connected_components
 from dedup.config import DEFAULT_CONFIG, DedupConfig
 from dedup.ingest import exact_edges, representatives, to_docs_arrow
-from dedup.signatures import (
-    with_bands,
-    with_bands_pre,
-    with_shingle_signatures,
-    with_shingles_np,
-    with_slim_signatures,
-)
+from dedup.signatures import with_bands, with_bands_pre, with_slim_signatures
 from dedup.verify import (
     BROADCAST_SIGS_MAX,
     est_filter_pairs,
@@ -112,12 +106,6 @@ def _spill_dir(name: str) -> str:
     return d
 
 
-#: broadcast the rep-id frame (8 B/row) below this many docs — 20M ids
-#: ≈ 160 MB broadcast, comfortably inside executor memory; beyond that
-#: fall back to the shuffle join (bucketed layout at real scale)
-BROADCAST_REP_IDS_MAX = 20_000_000
-
-
 @contextmanager
 def job_desc(spark, desc: str):
     """Label the Spark jobs of an eager action (profiling / Spark UI
@@ -177,59 +165,39 @@ def _spill(df: DataFrame, name: str) -> DataFrame:
 @dataclass
 class DedupResult:
     docs: DataFrame
-    #: pipeline signature spill — slimmed for scale: (doc_id,
-    #: band_hashes array<long>(bands), mh_pre array<long>(prefilter
-    #: perms), simhash, n_shingles). The full-width minhash frame is
-    #: `signatures.with_shingle_signatures(reps, cfg)` when needed.
+    #: pipeline signature spill (signatures.with_slim_signatures):
+    #: (doc_id, pre0..preN byte-packed MinHash low bytes, band_hashes
+    #: array<long>(bands), simhash, n_shingles). The full-width minhash
+    #: frame is `with_signatures(with_shingles(reps, cfg), cfg)`.
     signatures: DataFrame
     edges: DataFrame
     clusters: DataFrame  # docs + cluster_id (singletons included)
 
 
 def build_edges(
-    docs: DataFrame,
-    cfg: DedupConfig,
-    use_containment: bool = False,
-    persist: bool = True,
-):
-    """docs → (edges, signatures, shingles): representatives, their
-    signatures, then ``edges_from_signatures``."""
-    # Hint-broadcast the rep-id frame when the doc count is known small:
-    # without the hint the left-semi join map-writes the full docs text
-    # column before AQE can demote it (306 MB at 500k docs, ~77 task-s of
-    # shuffle write). In the persist path docs is parquet-backed, so the
-    # count is a metadata-only job. Above the cap (or for lazy callers)
-    # the safe shuffle join stands — at cluster scale the co-location
-    # comes from bucketed table layout instead (SURVEY §4.3).
-    n_docs = None
-    if persist:
-        with job_desc(docs.sparkSession, "dedup: spill sigsh"):
-            n_docs = docs.count()
-    reps = representatives(
-        docs, cfg, broadcast_ids=persist and n_docs <= BROADCAST_REP_IDS_MAX
-    )
-    # fused stage: shingle hashing + minhash + simhash in ONE Arrow
-    # crossing (signatures.with_shingle_signatures) — the JVM shingle
-    # expression + separate cache + separate UDF measured ~2× this cost
-    # and scaled poorly with cores (substring/array_distinct churn)
-    if persist:
-        # fused slim signature stage (see signatures.with_slim_signatures):
-        # band keys + est-prefilter minhash prefix + simhash in ONE Arrow
-        # crossing, then one parquet round-trip materializes it for the
-        # downstream consumers (band explode, simhash join, est prefilter
-        # a/b). The vectorized writer/reader is far cheaper than the
-        # columnar in-memory cache for array columns, and a lazy frame
-        # here would be recomputed by every concurrent branch of the next
-        # action (measured 6×). The full num_perm-wide minhash never
-        # leaves the Python worker — pairs are decided by exact shingle
-        # Jaccard, so the suffix is dead weight; committed signature I/O
-        # shrinks ~2.5× and the pair-join shuffle ~4×.
-        sigs = _spill(with_slim_signatures(reps, cfg), "sigsh")
-    else:
-        sigs = with_shingle_signatures(reps, cfg)
-    edges = edges_from_signatures(docs, sigs, cfg, n_docs, use_containment)
-    # lazy shingles frame, API compat for callers that want it
-    return edges, sigs, with_shingles_np(reps, cfg)
+    docs: DataFrame, cfg: DedupConfig, use_containment: bool = False
+) -> tuple[DataFrame, DataFrame]:
+    """docs → (edges, signatures): representatives, their slim signature
+    spill, then ``edges_from_signatures``."""
+    # the doc count feeds the rep-id broadcast gate
+    # (ingest.representatives) and the edge builder's gates; on a
+    # parquet-backed docs frame it is a metadata-only job
+    with job_desc(docs.sparkSession, "dedup: spill sigsh"):
+        n_docs = docs.count()
+    reps = representatives(docs, cfg, n_docs)
+    # fused slim signature stage (see signatures.with_slim_signatures):
+    # band keys + est-prefilter minhash prefix + simhash in ONE Arrow
+    # crossing, then one parquet round-trip materializes it for the
+    # downstream consumers (band explode, simhash join, est prefilter
+    # a/b). The vectorized writer/reader is far cheaper than the
+    # columnar in-memory cache for array columns, and a lazy frame here
+    # would be recomputed by every concurrent branch of the next action
+    # (measured 6×). The full num_perm-wide minhash never leaves the
+    # Python worker — pairs are decided by exact shingle Jaccard, so the
+    # suffix is dead weight; committed signature I/O shrinks ~2.5× and
+    # the pair-join shuffle ~4×.
+    sigs = _spill(with_slim_signatures(reps, cfg), "sigsh")
+    return edges_from_signatures(docs, sigs, cfg, n_docs, use_containment), sigs
 
 
 def edges_from_signatures(
@@ -256,8 +224,8 @@ def edges_from_signatures(
         and estimate_sideband_bytes(n_docs, cfg) <= BROADCAST_SIDEBAND_MAX_BYTES
     )
     cands, pre_refined = candidates_from_signatures(sigs, cfg, bcast_sigs)
-    # exact verification recomputes shingles only for est-passing docs
-    # (with_shingles_np) — the full shingle table is never materialized
+    # exact verification re-hashes shingles from text only for
+    # est-passing docs — the full shingle table is never materialized
     near = verify_jaccard_lazy(
         cands,
         docs,
@@ -291,28 +259,26 @@ def candidates_from_signatures(
 ) -> tuple[DataFrame, bool]:
     """Signatures → distinct candidate pairs (src, dst, est_jacc) past
     the stage-1 estimate filter, and whether the stage-2 refine already
-    ran in-kernel. Full-width (non-slim) signatures yield (src, dst)
-    and leave the estimate to the verifier.
+    ran in-kernel. ``sigs`` is a slim signature frame
+    (signatures.with_slim_signatures).
 
     One candidate tier per data-size regime, picked by one gate:
 
-    - **broadcast** (``fused_candidates_bcast``): slim signatures, no
-      salting, and ``bcast_sigs`` (the doc count within
-      ``BROADCAST_SIGS_MAX`` and the sideband within
-      ``BROADCAST_SIDEBAND_MAX_BYTES``);
+    - **broadcast** (``fused_candidates_bcast``): no salting, and
+      ``bcast_sigs`` (the doc count within ``BROADCAST_SIGS_MAX`` and
+      the sideband within ``BROADCAST_SIDEBAND_MAX_BYTES``);
     - **Arrow shuffle** (``lsh_candidates_arrow`` +
-      ``simhash_candidates_arrow``): slim signatures, no salting, above
-      the gate — no driver collect;
+      ``simhash_candidates_arrow``): no salting, above the gate — no
+      driver collect;
     - **salted JVM join** (``skew.salted_lsh_candidates``):
-      ``cfg.salt_hot_thresh`` > 0, or full-width (non-slim) signatures.
+      ``cfg.salt_hot_thresh`` > 0.
 
     Every tier yields the same pairs and estimates
     (tests/test_edge_tiers.py). Kernels are looked up as this module's
     globals, so instrumentation that wraps them here covers both entry
     points."""
-    slim = all(c in sigs.columns for c in ("pre0", "pre1", "pre2", "pre3"))
     pre_refined = False
-    if slim and cfg.salt_hot_thresh <= 0 and bcast_sigs:
+    if cfg.salt_hot_thresh <= 0 and bcast_sigs:
         # Exchange-free broadcast candidate kernel
         # (candidates.fused_candidates_bcast): ALL per-doc metadata —
         # band hashes, simhash, n_shingles, packed MinHash bytes —
@@ -339,7 +305,7 @@ def candidates_from_signatures(
             cap=cfg.bucket_cap,
             full_est=pre_refined,
         )
-    elif slim and cfg.salt_hot_thresh <= 0:
+    elif cfg.salt_hot_thresh <= 0:
         # fused numpy bucket scan (candidates.lsh_candidates_arrow):
         # pairing + stage-1 est filter run inside the task that owns the
         # bucket — the 10-100×-overcomplete pair flood never exists as
@@ -357,24 +323,24 @@ def candidates_from_signatures(
             )
         )
     else:
-        # salted path when cfg.salt_hot_thresh > 0, plain equi-join
-        # otherwise. Raw (non-distinct) floods from both generators: the
-        # est prefilter runs fused into the join stage (pure codegen,
-        # verify.est_filter_pairs) and the pair-distinct shuffle happens
-        # on its survivors only.
+        # salted path. Raw (non-distinct) floods from both generators:
+        # the est prefilter runs fused into the join stage (pure
+        # codegen, verify.est_filter_pairs) and the pair-distinct
+        # shuffle happens on its survivors only.
         bands, _hot = cap_buckets(with_bands(sigs, cfg), cfg.bucket_cap)
-        cands = salted_lsh_candidates(bands, cfg, dedupe=False).union(
-            simhash_candidates_arrow(sigs, cfg, dedupe=False)
+        cands = est_filter_pairs(
+            salted_lsh_candidates(bands, cfg, dedupe=False).union(
+                simhash_candidates_arrow(sigs, cfg, dedupe=False)
+            ),
+            sigs,
+            cfg,
         )
-        if slim:
-            cands = est_filter_pairs(cands, sigs, cfg)
     return cands.dropDuplicates(["src", "dst"]), pre_refined
 
 
 def run_dedup(
     pages: DataFrame,
     cfg: DedupConfig = DEFAULT_CONFIG,
-    recompute_text: bool = False,
     use_containment: bool = False,
     edge_kinds: tuple[str, ...] = ("exact", "near"),
 ) -> DedupResult:
@@ -389,23 +355,22 @@ def run_dedup(
     # Same AQE-style runtime-stats-drive-the-plan rationale as the
     # broadcast switches.
     #
-    # SPECULATIVE OVERLAP (trusted-text path): the probe used to run
-    # serially BEFORE ingest (2.7 task-s at 4 cores, 19.8 at 32 — the
-    # pipeline's worst per-core inflater, pure source-scan contention;
-    # BENCH/BASELINE.md). Now the probe job runs from a daemon thread
-    # while the main thread speculates the common case: ingest ALL
-    # captures immediately (assume_unique_urls=True) carrying the 8 B
-    # latest_by_url tie-break (`_tb`). If the probe reports duplicate
-    # urls, the winning captures are picked AFTER the spill by
-    # `ingest.latest_docs_by_url` — provably the same winners (parity
-    # test), and the collapse agg now shuffles the slim html-free spill
-    # instead of raw pages. Mis-speculation cost: the derived-column
-    # kernel ran over losing captures too. The extractor path
-    # (recompute_text=True) never speculates — extracting losing
-    # captures would run the expensive UDF on rows the probe-first plan
-    # provably skips.
+    # SPECULATIVE OVERLAP: the probe used to run serially BEFORE ingest
+    # (2.7 task-s at 4 cores, 19.8 at 32 — the pipeline's worst per-core
+    # inflater, pure source-scan contention; BENCH/BASELINE.md). Now the
+    # probe job runs from a daemon thread while the main thread
+    # speculates the common case: ingest ALL captures immediately
+    # (assume_unique_urls=True) carrying the 8 B latest_by_url tie-break
+    # (`_tb`). If the probe reports duplicate urls, the winning captures
+    # are picked AFTER the spill by `ingest.latest_docs_by_url` —
+    # provably the same winners (parity test), and the collapse agg now
+    # shuffles the slim html-free spill instead of raw pages.
+    # Mis-speculation cost: the derived-column kernel ran over losing
+    # captures too. The thread is an InheritableThread, so the probe's
+    # jobs run in the caller's job group (and are cancelled with it).
+    from pyspark import InheritableThread
+
     spark = pages.sparkSession
-    speculate = not recompute_text
     probe_out: dict = {}
 
     def _probe() -> None:
@@ -438,64 +403,42 @@ def run_dedup(
     # ASCII batches with the oracle's Python twin as fallback.
     # keep_text=False: the raw text never crosses Arrow back — the
     # pipeline reads only norm_text past ingest.
-    if speculate:
-        import threading
+    t = InheritableThread(target=_probe, daemon=True)
+    t.start()
+    docs = _spill(
+        to_docs_arrow(
+            pages,
+            cfg,
+            assume_unique_urls=True,
+            keep_text=False,
+            carry_tiebreak=True,
+        ),
+        "docs",
+    )
+    t.join()
+    if "err" in probe_out:
+        raise RuntimeError("url-uniqueness probe failed") from probe_out["err"]
+    cnt = probe_out["cnt"]
+    if cnt["n"] != cnt["u"]:
+        from dedup.ingest import latest_docs_by_url
 
-        t = threading.Thread(target=_probe, daemon=True)
-        t.start()
-        docs = _spill(
-            to_docs_arrow(
-                pages,
-                cfg,
-                recompute_text=False,
-                assume_unique_urls=True,
-                keep_text=False,
-                carry_tiebreak=True,
-            ),
-            "docs",
-        )
-        t.join()
-        if "err" in probe_out:
-            raise RuntimeError("url-uniqueness probe failed") from probe_out["err"]
-        cnt = probe_out["cnt"]
-        if cnt["n"] != cnt["u"]:
-            from dedup.ingest import latest_docs_by_url
+        pre_dir = getattr(docs, "_dedup_spill_dir", None)
+        docs = _spill(latest_docs_by_url(docs), "docs")
+        # the collapsed spill fully materialized above — free the
+        # superseded all-captures spill now instead of at process exit
+        # (on a heavily multi-captured crawl it would roughly double the
+        # docs footprint on the RAM-backed scratch for the rest of the
+        # run; CLAUDE.md documents that budget as already marginal at 2M
+        # local docs)
+        if pre_dir:
+            import shutil
 
-            pre_dir = getattr(docs, "_dedup_spill_dir", None)
-            docs = _spill(latest_docs_by_url(docs), "docs")
-            # the collapsed spill fully materialized above — free the
-            # superseded all-captures spill now instead of at process
-            # exit (on a heavily multi-captured crawl it would roughly
-            # double the docs footprint on the RAM-backed scratch for
-            # the rest of the run; CLAUDE.md documents that budget as
-            # already marginal at 2M local docs)
-            if pre_dir:
-                import shutil
-
-                shutil.rmtree(pre_dir, ignore_errors=True)
-                if pre_dir in _SPILL_DIRS:
-                    _SPILL_DIRS.remove(pre_dir)
-        else:
-            docs = docs.drop("_tb")
+            shutil.rmtree(pre_dir, ignore_errors=True)
+            if pre_dir in _SPILL_DIRS:
+                _SPILL_DIRS.remove(pre_dir)
     else:
-        _probe()
-        # same masking guard as the speculative branch: a Spark failure
-        # inside the probe must surface as the chained cause, not as a
-        # bare KeyError('cnt')
-        if "err" in probe_out:
-            raise RuntimeError("url-uniqueness probe failed") from probe_out["err"]
-        cnt = probe_out["cnt"]
-        docs = _spill(
-            to_docs_arrow(
-                pages,
-                cfg,
-                recompute_text=True,
-                assume_unique_urls=cnt["n"] == cnt["u"],
-                keep_text=False,
-            ),
-            "docs",
-        )
-    edges, sigs, _sh = build_edges(docs, cfg, use_containment=use_containment)
+        docs = docs.drop("_tb")
+    edges, sigs = build_edges(docs, cfg, use_containment=use_containment)
     edges = edges.persist(StorageLevel.MEMORY_AND_DISK_DESER)
     with job_desc(pages.sparkSession, "dedup: verify edges + cc"):
         comp = connected_components(

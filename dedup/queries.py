@@ -2108,7 +2108,7 @@ def q_conn_comp(spark, sf_dir):
         F.length("norm_text").cast("long").alias("n_chars"),
         F.sha2("norm_text", 256).alias("content_sha"),
     )
-    edges, _s, _sh = build_edges(docs, cfg, persist=False)
+    edges, _s = build_edges(docs, cfg)
     # source-table doc_ids flow straight through build_edges here, so
     # min-doc_id component labels are already in the oracle's id space
     return connected_components(edges, max_iter=cfg.max_cc_iter)

@@ -1,24 +1,23 @@
 """Signature stage: shingles → MinHash + SimHash (SURVEY.md §2 C1-C4).
 
-Division of labor, chosen deliberately for scale:
+Two forms, one semantics (parity in tests):
 
-- **Shingle hashing stays JVM-side** as a pure SQL higher-order
-  expression (``transform(sequence(...), i -> xxhash64(substring(...)))``)
-  — whole-stage codegen, no Arrow crossing, and the hash function is
-  Spark's own xxhash64 so it is identical everywhere by definition.
-- **MinHash/SimHash cross to Python once**, as `array<long>` shingle
-  hashes through an iterator-form pandas UDF (Arrow batches), where the
-  numpy cores in hashing.py do matrix min / bit votes. One crossing,
-  vectorized both sides — this is the "batched shingling, MinHash and
-  SimHash in vectorized pandas/Arrow UDFs" demanded by BASELINE.json:6.
-- **Band keys are again pure SQL** (slice + xxhash64 over array),
-  exploded JVM-side.
+- **The pipeline's slim form** (``with_slim_signatures``): shingle
+  hashing, MinHash, band keys and SimHash in ONE Arrow crossing over
+  norm_text, emitting band keys and byte-packed MinHash low bytes
+  instead of the full MinHash array. Both entry points sign with it.
+- **The full-width JVM form** (``with_signatures(with_shingles(…))``),
+  kept for the streaming path and the registry qkeys: shingle hashing
+  stays JVM-side as a pure SQL higher-order expression
+  (``transform(sequence(...), i -> xxhash64(substring(...)))``), the
+  MinHash/SimHash numpy cores run in one ``mapInArrow`` crossing, and
+  band keys are again pure SQL (slice + xxhash64 over the array).
 
-Committed signature tables are ``repartitionByRange`` on (minhash[0],
-doc_id) via ``range_partition_by_sig_prefix`` (BASELINE.json:6): range-
-clusters similar docs and gives deterministic file clustering. It is a
-SINK-side step — range partitioning samples its child, so doing it
-mid-pipeline would evaluate the signature UDF twice.
+Committed signature tables are ``repartitionByRange`` on (pre0, doc_id)
+via ``range_partition_by_sig_prefix`` (BASELINE.json:6): range-clusters
+similar docs and gives deterministic file clustering. It is a SINK-side
+step — range partitioning samples its child, so doing it mid-pipeline
+would evaluate the signature UDF twice.
 """
 
 from __future__ import annotations
@@ -158,159 +157,30 @@ def with_signatures(shingles: DataFrame, cfg: DedupConfig) -> DataFrame:
     )
 
 
-def with_shingles_np(reps: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Numpy twin of ``with_shingles`` (same distinct-k-gram semantics,
-    bit-identical hashes, ascending order): one ``mapInArrow`` pass over
-    (doc_id, norm_text) → (doc_id, shingles, n_shingles). Used to
-    RECOMPUTE shingles for the small set of docs that reach exact
-    verification — at scale that is far cheaper than materializing and
-    shuffling the full shingle table (arrays dominate the signature
-    spill ~4:1 and were scanned+shuffled twice by the verify joins)."""
-    import pyarrow as pa
-
-    from dedup.hashing import hash_char_kgrams
-
-    k = cfg.k
-    out_schema = pa.schema(
-        [
-            pa.field("doc_id", pa.int64(), False),
-            pa.field("shingles", pa.list_(pa.int64()), False),
-            pa.field("n_shingles", pa.int32(), False),
-        ]
-    )
-
-    def run(batches):
-        for rb in batches:
-            n = rb.num_rows
-            if n == 0:
-                continue
-            txt = rb.column(rb.schema.get_field_index("norm_text"))
-            if txt.null_count:
-                txt = pa.compute.fill_null(txt, "")
-            off_dtype = "<i8" if pa.types.is_large_string(txt.type) else "<i4"
-            bufs = txt.buffers()
-            offsets = np.frombuffer(bufs[1], dtype=off_dtype)[
-                txt.offset : txt.offset + n + 1
-            ].astype(np.int64)
-            data = (
-                np.frombuffer(bufs[2], dtype=np.uint8)
-                if bufs[2] is not None
-                else np.empty(0, dtype=np.uint8)
-            )
-            flat_u64, lengths = hash_char_kgrams(data, offsets, k)
-            sh_off = np.zeros(n + 1, dtype=np.int32)
-            np.cumsum(lengths, out=sh_off[1:])
-            sh_list = pa.ListArray.from_arrays(
-                pa.array(sh_off), pa.array(flat_u64.view(np.int64))
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    rb.column(rb.schema.get_field_index("doc_id")),
-                    sh_list,
-                    pa.array(lengths.astype(np.int32)),
-                ],
-                schema=out_schema,
-            )
-
-    return reps.select("doc_id", "norm_text").mapInArrow(
-        run, schema="doc_id long, shingles array<long>, n_shingles int"
-    )
-
-
-def with_shingle_signatures(reps: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Fused signature stage: reps(doc_id, norm_text) → (doc_id, minhash,
-    simhash, n_shingles) in ONE ``mapInArrow`` pass. Shingle arrays are
-    deliberately NOT emitted: only exact verification needs them, for a
-    small fraction of docs, and ``with_shingles_np`` recomputes those
-    on demand (cheaper than materializing + shuffling the full table).
-
-    This is the pipeline's hot path. The per-stage split (JVM shingle
-    expression → cache → Arrow crossing → minhash UDF) measured ~430
-    core-seconds in the codegen'd `substring`/`xxhash64`/`array_distinct`
-    row interpreter alone at 100k docs; here the shingle hashes come from
-    ``hashing.hash_char_kgrams`` working directly on the Arrow string
-    buffer (utf-8 bytes + offsets, no per-row objects), bit-identical to
-    the JVM expression (parity asserted in tests), ~30× cheaper, and the
-    whole stage scales linearly with cores. One Arrow crossing carries
-    norm_text in and all signature columns out."""
-    import pyarrow as pa
-
-    from dedup.hashing import hash_char_kgrams
-
-    k, num_perm, perm_seed = cfg.k, cfg.num_perm, cfg.perm_seed
-    out_schema = pa.schema(
-        [
-            pa.field("doc_id", pa.int64(), False),
-            pa.field("minhash", pa.list_(pa.int64()), False),
-            pa.field("simhash", pa.int64(), False),
-            pa.field("n_shingles", pa.int32(), False),
-        ]
-    )
-
-    def run(batches):
-        consts = perm_consts(num_perm, perm_seed)
-        for rb in batches:
-            n = rb.num_rows
-            if n == 0:
-                continue
-            txt = rb.column(rb.schema.get_field_index("norm_text"))
-            if txt.null_count:
-                txt = pa.compute.fill_null(txt, "")
-            off_dtype = "<i8" if pa.types.is_large_string(txt.type) else "<i4"
-            bufs = txt.buffers()
-            offsets = np.frombuffer(bufs[1], dtype=off_dtype)[
-                txt.offset : txt.offset + n + 1
-            ].astype(np.int64)
-            data = (
-                np.frombuffer(bufs[2], dtype=np.uint8)
-                if bufs[2] is not None
-                else np.empty(0, dtype=np.uint8)
-            )
-            flat_u64, lengths = hash_char_kgrams(data, offsets, k)
-            flat = flat_u64.view(np.int64)
-            mh = _mh_matrix(flat, lengths, cfg, consts, sorted_segments=True).view(np.int64)
-            simh = simhash_batch(flat, lengths)
-            mh_list = pa.ListArray.from_arrays(
-                pa.array(np.arange(0, (n + 1) * num_perm, num_perm, dtype=np.int32)),
-                pa.array(mh.reshape(-1)),
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    rb.column(rb.schema.get_field_index("doc_id")),
-                    mh_list,
-                    pa.array(simh),
-                    pa.array(lengths.astype(np.int32)),
-                ],
-                schema=out_schema,
-            )
-
-    return reps.select("doc_id", "norm_text").mapInArrow(
-        run,
-        schema="doc_id long, minhash array<long>, simhash long, n_shingles int",
-    )
-
-
 def with_slim_signatures(reps: DataFrame, cfg: DedupConfig) -> DataFrame:
     """Fused PIPELINE signature stage: reps(doc_id, norm_text) →
-    (doc_id, band_hashes, mh_pre, simhash, n_shingles) in one mapInArrow
-    pass — shingle k-gram hashing, MinHash, LSH band keys, SimHash, all
-    numpy, one Arrow crossing.
+    (doc_id, pre0..preN, band_hashes, simhash, n_shingles) in one
+    mapInArrow pass — shingle k-gram hashing, MinHash, LSH band keys,
+    SimHash, all numpy, one Arrow crossing. The only signature form the
+    edge builder (pipeline.edges_from_signatures) takes.
 
-    This is the scale-slimmed twin of ``with_shingle_signatures``: the
-    full num_perm-wide minhash array never leaves the Python worker.
-    Downstream only needs (a) the band keys for LSH blocking — computed
-    here via ``hashing.band_hashes_batch``, bit-identical to the JVM
-    ``xxhash64(i, slice(...))`` fold (parity in tests) — and (b) the
-    ``est_prefilter_perms`` MinHash prefix for the estimate prefilter
-    (pairs are DECIDED by exact shingle Jaccard, so the suffix is dead
-    weight). Cuts the committed signature I/O and the pair-join shuffle
-    ~2.5×/4× vs shipping full arrays."""
+    Shingle hashes come from ``hashing.hash_char_kgrams`` working on the
+    Arrow string buffer, bit-identical to ``shingles_expr`` and ~30×
+    cheaper than the JVM expression. The full num_perm-wide minhash
+    array never leaves the Python worker. Downstream only needs (a) the
+    band keys for LSH blocking — computed here via
+    ``hashing.band_hashes_batch``, bit-identical to the JVM
+    ``xxhash64(i, slice(...))`` fold — and (b) the low byte of each
+    MinHash position for the two estimate filters (pairs are DECIDED by
+    exact shingle Jaccard, so the rest is dead weight). Cuts the
+    committed signature I/O and the pair-join shuffle ~2.5×/4× vs
+    shipping full arrays. Parity with the full-width JVM path
+    ``with_signatures(with_shingles(…))`` is asserted in tests."""
     import pyarrow as pa
 
-    from dedup.hashing import band_hashes_batch, hash_char_kgrams
+    from dedup.hashing import str_buffers
 
-    k, num_perm, perm_seed = cfg.k, cfg.num_perm, cfg.perm_seed
-    b, r = cfg.bands, cfg.rows_per_band
+    num_perm, perm_seed, b = cfg.num_perm, cfg.perm_seed, cfg.bands
     # byte-pack the low byte of EVERY MinHash position (not just the
     # stage-1 prefix): the first 4 longs carry the 32-perm inline
     # prefilter bytes exactly as before; the remaining longs feed the
@@ -335,18 +205,8 @@ def with_slim_signatures(reps: DataFrame, cfg: DedupConfig) -> DataFrame:
             n = rb.num_rows
             if n == 0:
                 continue
-            txt = rb.column(rb.schema.get_field_index("norm_text"))
-            if txt.null_count:
-                txt = pa.compute.fill_null(txt, "")
-            off_dtype = "<i8" if pa.types.is_large_string(txt.type) else "<i4"
-            bufs = txt.buffers()
-            offsets = np.frombuffer(bufs[1], dtype=off_dtype)[
-                txt.offset : txt.offset + n + 1
-            ].astype(np.int64)
-            data = (
-                np.frombuffer(bufs[2], dtype=np.uint8)
-                if bufs[2] is not None
-                else np.empty(0, dtype=np.uint8)
+            data, offsets = str_buffers(
+                rb.column(rb.schema.get_field_index("norm_text"))
             )
             # byte-packed est bytes: low byte of each MinHash position,
             # packed little-endian into longs. The prefilters count equal
@@ -383,18 +243,16 @@ def with_slim_signatures(reps: DataFrame, cfg: DedupConfig) -> DataFrame:
 
 
 def range_partition_by_sig_prefix(sigs: DataFrame, n_partitions: int | None = None) -> DataFrame:
-    """``repartitionByRange`` on (minhash[0], doc_id) — the BASELINE.json:6
-    signature-prefix range clustering. Applied at the SINK boundary (file
-    clustering before a committed write), NOT mid-pipeline: range
-    partitioning samples its child to pick bounds, which would evaluate
-    the signature UDF twice if placed before the persist point."""
+    """``repartitionByRange`` of a slim signature frame on (pre0, doc_id)
+    — the BASELINE.json:6 signature-prefix range clustering (pre0 packs
+    the low bytes of the first 8 MinHash positions). Applied at the SINK
+    boundary (file clustering before a committed write), NOT
+    mid-pipeline: range partitioning samples its child to pick bounds,
+    which would evaluate the signature UDF twice if placed before the
+    persist point."""
     if n_partitions is None:
         n_partitions = int(sigs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    # full frames range-cluster on the first MinHash position; slim
-    # frames on pre0 (the byte-packed low bytes of the first 8 positions
-    # — same signature-derived clustering, already materialized)
-    key = F.col("minhash")[0] if "minhash" in sigs.columns else F.col("pre0")
-    return sigs.repartitionByRange(n_partitions, key, F.col("doc_id"))
+    return sigs.repartitionByRange(n_partitions, F.col("pre0"), F.col("doc_id"))
 
 
 def band_hashes_expr(cfg: DedupConfig) -> F.Column:
@@ -441,10 +299,9 @@ def with_bands_pre(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
     collision (odds ~(b·n)²/2⁶⁴) merely merges two buckets, i.e. ADDS
     candidate pairs; candidates only ever become edges through exact
     Jaccard verification, so the final edge set is unchanged."""
-    pres = [c for c in ("pre0", "pre1", "pre2", "pre3") if c in signatures.columns]
     return signatures.select(
         "doc_id",
         "n_shingles",
-        *pres,
+        "pre0", "pre1", "pre2", "pre3",
         F.explode(F.col("band_hashes")).alias("band_hash"),
     )

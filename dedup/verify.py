@@ -14,13 +14,18 @@ picked by the est-passing pair count (``verify_jaccard_lazy``):
   kernel that hashes each batch's distinct docs.
 
 ``exact_jaccard_expr`` over shingle arrays is the pure-SQL twin the
-tests hold both kernels to. MinHash-estimate (E1) is a cheap pure-SQL
-metric. The LCS ratio (E3) is the reference-parity matcher (the
-reference's pairwise string/LCS similarity, BASELINE.json:6),
-implemented as a vectorized pandas UDF with an O(n·m) numpy DP — like
-the reference it is only ever applied POST-blocking, to candidate
-pairs. Suffix-array containment (E5) detects long exact substring
-overlaps between candidate texts.
+tests hold both kernels to. The MinHash estimate (E1) prunes pairs
+before any text moves, as pure-codegen SQL over the slim signatures'
+byte-packed MinHash longs: ``est_filter_pairs`` (stage 1, the 32-perm
+prefix) and ``refine_est_pairs`` (stage 2, the full packed width).
+``est_jaccard_expr`` over full-width MinHash arrays serves the
+registry's and the streaming path's ``verify_jaccard``. The LCS ratio
+(E3) is the reference-parity matcher (the reference's pairwise
+string/LCS similarity, BASELINE.json:6), implemented as a vectorized
+pandas UDF with an O(n·m) numpy DP — like the reference it is only
+ever applied POST-blocking, to candidate pairs. Suffix-array
+containment (E5) detects long exact substring overlaps between
+candidate texts.
 """
 
 from __future__ import annotations
@@ -206,72 +211,6 @@ def verify_jaccard(
     )
 
 
-def _est_agreement_arrow(
-    withmh: DataFrame, num_perm: int, passthrough: tuple[str, ...] = ()
-) -> DataFrame:
-    """(src, dst, mh_a, mh_b[, passthrough…]) → (src, dst, est_jacc[,
-    passthrough…]) via one mapInArrow pass: the signature arrays are
-    fixed-width ``num_perm``, so the whole batch reshapes to
-    (n, num_perm) and the positional-agreement count is a single
-    vectorized compare — replacing the per-element interpreted
-    ``zip_with``/``aggregate`` lambdas, whose object churn dominated the
-    stage's JVM CPU at high core counts (profiled: ~3x task-time
-    inflation local[8] → local[32]). ``passthrough`` columns (e.g. a
-    per-pair OPH floor) ride the batch unchanged."""
-    import pyarrow as pa
-
-    extra_schema = "".join(f", {c} double" for c in passthrough)
-
-    def run(batches):
-        for rb in batches:
-            n = rb.num_rows
-            if n == 0:
-                continue
-
-            def mat(name):
-                col = rb.column(rb.schema.get_field_index(name))
-                off = col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-                vals = col.values.to_numpy(zero_copy_only=False)
-                return vals[off[0] : off[-1]].reshape(n, num_perm)
-
-            agree = (mat("mh_a") == mat("mh_b")).sum(axis=1) / float(num_perm)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    rb.column(rb.schema.get_field_index("src")),
-                    rb.column(rb.schema.get_field_index("dst")),
-                    pa.array(agree),
-                ]
-                + [rb.column(rb.schema.get_field_index(c)) for c in passthrough],
-                names=["src", "dst", "est_jacc", *passthrough],
-            )
-
-    return withmh.select("src", "dst", "mh_a", "mh_b", *passthrough).mapInArrow(
-        run, schema="src long, dst long, est_jacc double" + extra_schema
-    )
-
-
-def _str_col_np(txt, n: int):
-    """Arrow StringArray → (uint8 data-buffer view, int64[n+1] absolute
-    byte offsets) — the zero-copy form ``hashing.hash_char_kgrams``
-    consumes. Nulls are filled with '' first (empty doc ⇒ the pinned
-    short-doc shingle rule applies)."""
-    import pyarrow as pa
-
-    if txt.null_count:
-        txt = pa.compute.fill_null(txt, "")
-    off_dtype = "<i8" if pa.types.is_large_string(txt.type) else "<i4"
-    bufs = txt.buffers()
-    offsets = np.frombuffer(bufs[1], dtype=off_dtype)[
-        txt.offset : txt.offset + n + 1
-    ].astype(np.int64)
-    data = (
-        np.frombuffer(bufs[2], dtype=np.uint8)
-        if bufs[2] is not None
-        else np.empty(0, dtype=np.uint8)
-    )
-    return data, offsets
-
-
 def _jaccard_indexed(
     vals: np.ndarray, offs: np.ndarray, ia: np.ndarray, ib: np.ndarray
 ) -> np.ndarray:
@@ -320,7 +259,7 @@ def _exact_jaccard_text_arrow(withtext: DataFrame, cfg: DedupConfig) -> DataFram
     representatives, so equal id ⇒ identical text by construction)."""
     import pyarrow as pa
 
-    from dedup.hashing import hash_char_kgrams
+    from dedup.hashing import hash_char_kgrams, str_buffers
 
     k = cfg.k
 
@@ -332,8 +271,8 @@ def _exact_jaccard_text_arrow(withtext: DataFrame, cfg: DedupConfig) -> DataFram
             idx = rb.schema.get_field_index
             src = rb.column(idx("src")).to_numpy(zero_copy_only=False)
             dst = rb.column(idx("dst")).to_numpy(zero_copy_only=False)
-            da, toa = _str_col_np(rb.column(idx("t_a")), n)
-            db, tob = _str_col_np(rb.column(idx("t_b")), n)
+            da, toa = str_buffers(rb.column(idx("t_a")))
+            db, tob = str_buffers(rb.column(idx("t_b")))
             uniq, first, inv = np.unique(
                 np.concatenate([src, dst]), return_index=True, return_inverse=True
             )
@@ -530,8 +469,9 @@ def verify_jaccard_lazy(
     broadcast_sigs: bool = False,
     pre_refined: bool = False,
 ) -> DataFrame:
-    """Candidate pairs → verified 'near' edges, recomputing shingles only
-    for docs that survive the MinHash-estimate pre-filter — from TEXT,
+    """Stage-1 est-passing candidate pairs (src, dst, est_jacc) over slim
+    ``signatures`` → verified 'near' edges, recomputing shingles only
+    for docs that survive the MinHash-estimate filters — from TEXT,
     inside the exact-Jaccard kernel.
 
     Shingle arrays (8 B per char window) are ~8× the utf-8 text they
@@ -552,78 +492,21 @@ def verify_jaccard_lazy(
     Both regimes return the same (src, dst, est_jacc, sim) rows."""
     from dedup.pipeline import job_desc
 
-    # prefix-prefilter: ship only the first est_prefilter_perms MinHash
-    # positions through the pair join (the pipeline's biggest shuffle);
-    # the floor adapts to the narrower estimator (see config). With the
-    # byte-packed spill (4 scalar longs per doc) the whole filter is one
-    # codegen'd expression; byte collisions only raise the estimate, so
-    # the passed set is a superset of the exact-agreement one — recall
-    # is untouched and exact Jaccard still decides every edge.
-    p = min(cfg.est_prefilter_perms or cfg.num_perm, cfg.num_perm)
-    if "est_jacc" in pairs.columns:
-        # pipeline path: the stage-1 est filter already ran fused into
-        # the candidate-join stage (est_filter_pairs). When the slim
-        # signatures carry the full byte-packed width, run the tighter
-        # stage-2 refinement on the distinct survivors before pinning —
-        # its floor rejects most borderline pairs that would otherwise
-        # ship text into the exact-verify kernel. ``pre_refined`` means
-        # the candidate kernel already applied the full-width refine
-        # in-kernel (fused_candidates_bcast full_est) — identical
-        # semantics, so re-running it here would be two broadcast joins
-        # for nothing.
-        if pre_refined:
-            est_frame = pairs
-        elif len(_all_pre_cols(signatures)) > 4:
-            est_frame = refine_est_pairs(
-                pairs.drop("est_jacc"), signatures, cfg, broadcast_sigs=broadcast_sigs
-            )
-        else:
-            est_frame = pairs
-        floor = None
-    elif all(c in signatures.columns for c in _PRE_COLS):
-        p = min(p, 32)
-        fa = signatures.select(
-            F.col("doc_id").alias("src"),
-            F.col("n_shingles").alias("n_a"),
-            *[F.col(c).alias(f"a{i}") for i, c in enumerate(_PRE_COLS)],
-        )
-        fb = signatures.select(
-            F.col("doc_id").alias("dst"),
-            F.col("n_shingles").alias("n_b"),
-            *[F.col(c).alias(f"b{i}") for i, c in enumerate(_PRE_COLS)],
-        )
-        floor = est_floor_expr(cfg, p, F.least("n_a", "n_b"))
-        est_frame = (
-            pairs.join(fa, "src")
-            .join(fb, "dst")
-            .select(
-                "src", "dst", packed_agreement_expr(p).alias("est_jacc"),
-                floor.alias("_floor"),
-            )
-        )
-        floor = F.col("_floor")
+    # the stage-1 est filter already ran fused into the candidate stage
+    # (est_filter_pairs or the candidate kernel). When the slim
+    # signatures carry the full byte-packed width, run the tighter
+    # stage-2 refinement on the distinct survivors before pinning — its
+    # floor rejects most borderline pairs that would otherwise ship text
+    # into the exact-verify kernel. ``pre_refined`` means the candidate
+    # kernel already applied the full-width refine in-kernel
+    # (fused_candidates_bcast full_est) — identical semantics, so
+    # re-running it here would be two broadcast joins for nothing.
+    if pre_refined or len(_all_pre_cols(signatures)) <= 4:
+        est_frame = pairs
     else:
-        fa = signatures.select(
-            F.col("doc_id").alias("src"),
-            F.col("n_shingles").alias("n_a"),
-            (F.col("minhash") if p == cfg.num_perm else F.slice("minhash", 1, p)).alias("mh_a"),
+        est_frame = refine_est_pairs(
+            pairs.drop("est_jacc"), signatures, cfg, broadcast_sigs=broadcast_sigs
         )
-        fb = signatures.select(
-            F.col("doc_id").alias("dst"),
-            F.col("n_shingles").alias("n_b"),
-            (F.col("minhash") if p == cfg.num_perm else F.slice("minhash", 1, p)).alias("mh_b"),
-        )
-        floor = est_floor_expr(cfg, p, F.least("n_a", "n_b"))
-        est_frame = _est_agreement_arrow(
-            pairs.join(fa, "src").join(fb, "dst").withColumn("_floor", floor),
-            p,
-            passthrough=("_floor",),
-        )
-        floor = F.col("_floor")
-    if floor is not None:
-        est_frame = est_frame.filter(F.col("est_jacc") >= floor)
-        if "_floor" in est_frame.columns:
-            est_frame = est_frame.drop("_floor")
     with job_desc(pairs.sparkSession, "dedup: candidates + est-filter"):
         passed = est_frame.localCheckpoint(eager=True)
         # the count is ~free: `passed` is checkpointed
@@ -785,7 +668,7 @@ def _verify_bin_batches(batches, side: dict, k: int):
     absent from docs is dropped, as the inner text join drops it."""
     import pyarrow as pa
 
-    from dedup.hashing import hash_char_kgrams
+    from dedup.hashing import hash_char_kgrams, str_buffers
 
     rbs = [rb for rb in batches if rb.num_rows]
     if not rbs:
@@ -796,7 +679,7 @@ def _verify_bin_batches(batches, side: dict, k: int):
     txt = (
         tab.column("norm_text").take(first).cast(pa.large_string()).combine_chunks()
     )
-    flat, lcnt = hash_char_kgrams(*_str_col_np(txt, len(uniq)), k)
+    flat, lcnt = hash_char_kgrams(*str_buffers(txt), k)
     ho = np.zeros(len(uniq) + 1, dtype=np.int64)
     np.cumsum(lcnt, out=ho[1:])
     # bins by key (a key collision only puts two bins in one task)

@@ -187,43 +187,58 @@ def test_hash_char_kgrams_parity():
 
 
 def test_fused_signature_stage_matches_jvm_path(spark):
-    """with_shingle_signatures (numpy shingling, fused) must produce
-    identical minhash/simhash as the JVM shingles_expr → with_signatures
-    path, and with_shingles_np the same shingle SETS as the JVM
-    expression."""
+    """with_slim_signatures (numpy shingling, fused) must produce the
+    JVM shingles_expr → with_signatures path's simhash, n_shingles, band
+    keys and MinHash low bytes (the ``pre*`` longs), and
+    hash_char_kgrams over the same texts the JVM expression's shingle
+    SETS."""
+    import pyarrow as pa
+
     from dedup.config import DEFAULT_CONFIG as cfg
     from dedup.datagen import gen_pages
+    from dedup.hashing import hash_char_kgrams, str_buffers
     from dedup.ingest import representatives, to_docs
     from dedup.signatures import (
-        with_shingle_signatures,
+        band_hashes_expr,
         with_shingles,
-        with_shingles_np,
         with_signatures,
+        with_slim_signatures,
     )
 
     reps = representatives(to_docs(gen_pages(spark, 300, seed=9), cfg), cfg)
     fused = {
         r["doc_id"]: r
-        for r in with_shingle_signatures(reps, cfg).collect()
+        for r in with_slim_signatures(reps, cfg).collect()
     }
     jvm = {
         r["doc_id"]: r
-        for r in with_signatures(with_shingles(reps, cfg), cfg).collect()
+        for r in with_signatures(with_shingles(reps, cfg), cfg)
+        .withColumn("band_hashes", band_hashes_expr(cfg))
+        .collect()
     }
-    np_sh = {r["doc_id"]: r for r in with_shingles_np(reps, cfg).collect()}
     jvm_sh = {
         r["doc_id"]: r for r in with_shingles(reps, cfg).collect()
     }
+    texts = reps.select("doc_id", "norm_text").collect()
+    flat, lengths = hash_char_kgrams(
+        *str_buffers(pa.array([r["norm_text"] for r in texts])), cfg.k
+    )
+    ends = np.cumsum(lengths)
+    np_sh = {
+        r["doc_id"]: flat[e - n : e].view(np.int64).tolist()
+        for r, n, e in zip(texts, lengths, ends)
+    }
     assert set(fused) == set(jvm) and len(fused) > 0
     assert set(np_sh) == set(jvm_sh)
+    n_longs = -(-cfg.num_perm // 8)
     for doc_id, f in fused.items():
-        assert sorted(np_sh[doc_id]["shingles"]) == sorted(
-            jvm_sh[doc_id]["shingles"]
-        )
-        assert np_sh[doc_id]["n_shingles"] == jvm_sh[doc_id]["n_shingles"]
+        assert sorted(np_sh[doc_id]) == sorted(jvm_sh[doc_id]["shingles"])
         assert f["n_shingles"] == jvm_sh[doc_id]["n_shingles"]
-        assert f["minhash"] == jvm[doc_id]["minhash"]
         assert f["simhash"] == jvm[doc_id]["simhash"]
+        assert f["band_hashes"] == jvm[doc_id]["band_hashes"]
+        low = (np.array(jvm[doc_id]["minhash"], dtype=np.int64) & 0xFF).astype(np.uint8)
+        packed = np.array([f[f"pre{i}"] for i in range(n_longs)], dtype=np.int64)
+        assert (packed.view(np.uint8)[: cfg.num_perm] == low).all()
 
 
 def test_oph_batch_matches_reference():

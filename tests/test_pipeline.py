@@ -362,9 +362,10 @@ def test_run_dedup_every_job_is_labelled(run_jobs, monkeypatch):
 def test_run_dedup_job_count_is_pinned(run_jobs):
     """The number of Spark jobs one run_dedup call launches is pinned
     (fixed cost per run; ROADMAP direction C). A change that adds or
-    removes one updates RUN_DEDUP_JOBS and says why. Every job but the
-    url probe's runs in the caller's job group."""
+    removes one updates RUN_DEDUP_JOBS and says why. Every job, the url
+    probe's thread included, runs in the caller's job group, so
+    ``cancelJobGroup`` on it cancels the whole run."""
     group, jobs = run_jobs
     assert len(jobs) == RUN_DEDUP_JOBS, [d for _j, d, _g in jobs]
-    outside = {d for _j, d, g in jobs if g != group}
-    assert outside <= {"dedup: url-uniqueness probe"}, outside
+    outside = [(j, d) for j, d, g in jobs if g != group]
+    assert not outside, outside

@@ -205,6 +205,42 @@ def test_trusted_text_scan_prunes_html(spark, tiny_pages_df, tmp_path):
     )
 
 
+def test_job_rep_semi_join_does_not_shuffle_docs(spark, tiny_pages_df, tmp_path, monkeypatch):
+    """The spark-submit job's representatives semi-join takes the
+    rep-id broadcast gate from the doc count it already holds, so the
+    docs side (norm_text, the bulk of the bytes) crosses no Exchange.
+    Size-based broadcast is disabled so the planner sees what it sees
+    at scale, where the docs frame's size estimate exceeds the
+    threshold and only the count-gated hint keeps the broadcast."""
+    from dedup import jobrunner
+    from dedup.config import DEFAULT_CONFIG
+    from dedup.tableio import TableIO
+
+    class Captured(Exception):
+        pass
+
+    seen = {}
+
+    def capture(reps, cfg):
+        seen["reps"] = reps
+        raise Captured
+
+    monkeypatch.setattr(jobrunner, "with_slim_signatures", capture)
+    tio = TableIO(spark, str(tmp_path / "wh_reps"), backend="parquet")
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        with pytest.raises(Captured):
+            jobrunner.run_dedup_job(
+                spark, tio, DEFAULT_CONFIG, "reps", tiny_pages_df.limit(200)
+            )
+        plan = _plan(seen["reps"])
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert "BroadcastHashJoin" in plan and "LeftSemi" in plan, plan
+    assert "Exchange hashpartitioning(doc_id" not in plan, plan
+
+
 def test_no_per_row_python_anywhere_in_harness():
     """BASELINE.json:15 sweep: no registered harness query may plan a
     row-at-a-time BatchEvalPython node; Python only ever appears as

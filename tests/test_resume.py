@@ -460,6 +460,55 @@ def test_stage_commit_bookkeeping_is_one_job(spark, tiny_pages_df, tmp_path):
         assert tio.read(t).schema == spark.read.parquet(*m["dirs"]).schema, t
 
 
+#: Spark jobs of each run_dedup_job stage on tiny_pages (local[4]), its
+#: commit and bookkeeping job included; "between" counts the jobs that
+#: run outside every stage (the docs persist's fill and count)
+RUN_DEDUP_JOB_STAGE_JOBS = {
+    "docs": 3,
+    "signatures": 7,
+    "edges": 11,
+    "clusters": 6,
+    "report": 4,
+    "between": 3,
+}
+
+
+def test_run_dedup_job_stage_job_counts_are_pinned(
+    spark, tiny_pages_df, tmp_path, monkeypatch
+):
+    """The number of Spark jobs each stage of the spark-submit job
+    launches is pinned, the way test_run_dedup_job_count_is_pinned pins
+    run_dedup's (fixed cost per run). A change that adds or removes one
+    updates RUN_DEDUP_JOB_STAGE_JOBS and says why."""
+    import uuid
+
+    from dedup import jobrunner
+
+    sc = spark.sparkContext
+    tag = uuid.uuid4().hex[:8]
+    stage = jobrunner.Runner.stage
+
+    def grouped(self, name, *a, **k):
+        sc.setLocalProperty("spark.jobGroup.id", f"st-{tag}-{name}")
+        try:
+            return stage(self, name, *a, **k)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", f"st-{tag}-between")
+
+    monkeypatch.setattr(jobrunner.Runner, "stage", grouped)
+    tio = TableIO(spark, str(tmp_path / "whS"), backend="parquet")
+    sc.setLocalProperty("spark.jobGroup.id", f"st-{tag}-between")
+    try:
+        r = jobrunner.run_dedup_job(spark, tio, DEFAULT_CONFIG, "runS", tiny_pages_df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert r.ran == ["docs", "signatures", "edges", "clusters", "report"]
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st = sc.statusTracker()
+    jobs = {s: len(st.getJobIdsForGroup(f"st-{tag}-{s}")) for s in RUN_DEDUP_JOB_STAGE_JOBS}
+    assert jobs == RUN_DEDUP_JOB_STAGE_JOBS, sorted(jobs.items())
+
+
 def test_plain_read_is_schema_pinned_and_old_manifests_infer(spark, tio):
     """A plain snapshot's read launches no Spark job (the committed
     schema is pinned); a manifest in the older format — no ``schema``

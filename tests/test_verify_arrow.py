@@ -8,52 +8,9 @@ from __future__ import annotations
 
 import random
 
-import pytest
 from pyspark.sql import functions as F
 
-from dedup.verify import (
-    _est_agreement_arrow,
-    est_jaccard_expr,
-    exact_jaccard_expr,
-)
-
-NUM_PERM = 16
-
-
-@pytest.fixture(scope="module")
-def pair_frames(spark):
-    rng = random.Random(7)
-    rows = []
-    for pid in range(200):
-        # signatures with controlled agreement; shingles sorted unsigned
-        mh_a = [rng.randrange(-(2**62), 2**62) for _ in range(NUM_PERM)]
-        mh_b = [
-            v if rng.random() < 0.5 else rng.randrange(-(2**62), 2**62)
-            for v in mh_a
-        ]
-        pool = [rng.randrange(-(2**63), 2**63 - 1) for _ in range(60)]
-        sa = sorted(rng.sample(pool, rng.randint(1, 40)), key=lambda x: x % 2**64)
-        sb = sorted(rng.sample(pool, rng.randint(1, 40)), key=lambda x: x % 2**64)
-        rows.append((pid, pid + 1_000_000, 0.5, mh_a, mh_b, sa, sb))
-    return spark.createDataFrame(
-        rows,
-        "src long, dst long, est_jacc double, mh_a array<long>, "
-        "mh_b array<long>, sh_a array<long>, sh_b array<long>",
-    )
-
-
-def test_est_agreement_arrow_matches_sql_expr(pair_frames):
-    got = {
-        (r.src, r.dst): r.est_jacc
-        for r in _est_agreement_arrow(pair_frames, NUM_PERM).collect()
-    }
-    want = {
-        (r.src, r.dst): r.est
-        for r in pair_frames.select(
-            "src", "dst", est_jaccard_expr(num_perm=NUM_PERM).alias("est")
-        ).collect()
-    }
-    assert got == want
+from dedup.verify import exact_jaccard_expr
 
 
 def test_band_hashes_batch_matches_sql_expr(spark):
@@ -157,20 +114,39 @@ def test_est_filter_pairs_matches_late_filter(spark, tiny_pages_df):
 
 
 def test_slim_signatures_match_full_stage(spark, tiny_pages_df):
+    """The slim pipeline signatures equal the full-width JVM path
+    (``with_signatures(with_shingles(…))``): same band keys per band,
+    simhash and n_shingles, and the byte-packed ``pre*`` longs hold the
+    low byte of each full-width MinHash position."""
+    import numpy as np
+
     from dedup.config import DEFAULT_CONFIG as cfg
     from dedup.ingest import representatives, to_docs
     from dedup.signatures import (
         with_bands,
-        with_shingle_signatures,
+        with_shingles,
+        with_signatures,
         with_slim_signatures,
     )
 
     reps = representatives(to_docs(tiny_pages_df, cfg), cfg)
-    full = with_bands(with_shingle_signatures(reps, cfg), cfg)
-    slim = with_bands(with_slim_signatures(reps, cfg), cfg)
-    a = {tuple(r) for r in full.collect()}
-    b = {tuple(r) for r in slim.collect()}
+    full_sigs = with_signatures(with_shingles(reps, cfg), cfg)
+    slim_sigs = with_slim_signatures(reps, cfg)
+    a = {tuple(r) for r in with_bands(full_sigs, cfg).collect()}
+    b = {tuple(r) for r in with_bands(slim_sigs, cfg).collect()}
     assert a == b
+
+    full = {r["doc_id"]: r for r in full_sigs.collect()}
+    slim = {r["doc_id"]: r for r in slim_sigs.collect()}
+    assert set(full) == set(slim) and len(full) > 0
+    n_longs = -(-cfg.num_perm // 8)
+    for doc_id, f in full.items():
+        s = slim[doc_id]
+        assert s["simhash"] == f["simhash"]
+        assert s["n_shingles"] == f["n_shingles"]
+        low = (np.array(f["minhash"], dtype=np.int64) & 0xFF).astype(np.uint8)
+        packed = np.array([s[f"pre{i}"] for i in range(n_longs)], dtype=np.int64)
+        assert (packed.view(np.uint8)[: cfg.num_perm] == low).all()
 
 
 def test_exact_jaccard_text_arrow_matches_shingle_sql(spark):
